@@ -21,7 +21,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from stac_catalog_builder_spark import oracles, synth
 from stac_catalog_builder_spark.session import read_parquet
 from stac_catalog_builder_spark.functions.cells import grid_cell_col
-from stac_catalog_builder_spark.functions.geo import rect_ring
 from stac_catalog_builder_spark.operators import dedup, sampling, similarity, textops
 from stac_catalog_builder_spark.operators.footprints import with_footprint
 from stac_catalog_builder_spark.operators.grouping import (
@@ -53,92 +52,17 @@ def _images_fp(spark: SparkSession, sf_dir: str, fan_out: bool = False) -> DataF
     return with_footprint(synth.images(spark, sf_dir, fan_out=fan_out))
 
 
-def _boundary_polygons(spark: SparkSession, sf_dir: str) -> list[dict]:
-    """Driver-side boundary dimension: 25 rectangles, consumed by the
-    polygon-dim prep (numpy, driver-side) — so load it with a direct
-    pyarrow read of nation.parquet instead of a Spark collect. The collect
-    was one whole Spark job of pure overhead (~0.25-0.4s warm) paid by
-    EVERY query that goes through ``_assigned``; the pyarrow read is ~5ms.
-    Arithmetic replicates synth.boundaries bit-for-bit (same IEEE double
-    ops in the same order; tests/test_boundary_polygons.py pins equality
-    against the Spark-collect derivation, values and row order)."""
-    import pyarrow.parquet as pq
-
-    from stac_catalog_builder_spark.synth import (
-        GRID_DLAT,
-        GRID_DLON,
-        GRID_LAT0,
-        GRID_LON0,
-        GRID_NX,
-    )
-
-    tab = pq.read_table(
-        f"{sf_dir}/nation.parquet", columns=["n_nationkey", "n_regionkey"]
-    )
-    polys = []
-    for nk, rk in zip(
-        tab.column("n_nationkey").to_pylist(), tab.column("n_regionkey").to_pylist()
-    ):
-        tx, ty = nk % GRID_NX, nk // GRID_NX
-        rx, ry = rect_ring(
-            GRID_LON0 + tx * GRID_DLON,
-            GRID_LAT0 + ty * GRID_DLAT,
-            GRID_LON0 + (tx + 1) * GRID_DLON,
-            GRID_LAT0 + (ty + 1) * GRID_DLAT,
-        )
-        polys.append(
-            {
-                "ring_x": rx,
-                "ring_y": ry,
-                "tile_id": f"E{tx}N{ty}",
-                "collection_id": f"coll_{rk}",
-            }
-        )
-    return polys
-
-
 def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spatial_join_pip(_images_fp(spark, sf_dir), _boundary_polygons(spark, sf_dir))
+    return spatial_join_pip(_images_fp(spark, sf_dir), synth.boundary_polygons(sf_dir))
+
+
+# Names kept for the bench harnesses (bench.py, perfbench/), which call them.
+def _boundary_polygons(spark: SparkSession, sf_dir: str) -> list[dict]:
+    return synth.boundary_polygons(sf_dir)
 
 
 def _knn_query_points(sf_dir: str):
-    """kNN query dimension (25 rows) as a driver-side pandas frame. The knn
-    operators collect the query dimension anyway (broadcast-var contract),
-    so deriving it with a Spark plan spent one whole job (~0.25-0.4s warm)
-    per calling query; this replicates synth.knn_queries bit-for-bit from a
-    direct pyarrow read (tests/test_boundary_polygons.py pins values, order
-    and dtypes against the Spark derivation)."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    from stac_catalog_builder_spark.synth import (
-        A_LAT,
-        A_LON,
-        HOT_JITTER_SCALE,
-        HOT_JITTER_STEPS,
-        HOT_LAT0,
-        HOT_LON0,
-        LAT_STEPS,
-        LON_STEPS,
-        M32,
-        STEP_SCALE,
-    )
-
-    keys = pq.read_table(
-        f"{sf_dir}/nation.parquet", columns=["n_nationkey"]
-    ).column("n_nationkey").to_pylist()
-    qid, qlon, qlat = [], [], []
-    for n in keys:
-        qk = n + 101
-        h1, h2 = (qk * A_LON) % M32, (qk * A_LAT) % M32
-        if n % 5 == 0:
-            qlon.append(HOT_LON0 + (h1 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
-            qlat.append(HOT_LAT0 + (h2 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
-        else:
-            qlon.append(-180.0 + (h1 % LON_STEPS) / STEP_SCALE)
-            qlat.append(-60.0 + (h2 % LAT_STEPS) / STEP_SCALE)
-        qid.append(f"q_{n:04d}")
-    return pd.DataFrame({"query_id": qid, "qlon": qlon, "qlat": qlat})
+    return synth.knn_query_points(sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -226,7 +150,7 @@ def q_item_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = knn_join(_images_fp(spark, sf_dir), _knn_query_points(sf_dir), k=5)
+    out = knn_join(_images_fp(spark, sf_dir), synth.knn_query_points(sf_dir), k=5)
     return out.select("query_id", "rank", "image_id")
 
 
@@ -883,7 +807,7 @@ def q_spatial_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         spatial_join_pip_partitioned,
     )
 
-    polys = _boundary_polygons(spark, sf_dir)
+    polys = synth.boundary_polygons(sf_dir)
     pdf = spark.createDataFrame(
         [
             (p["tile_id"], p["collection_id"],
@@ -940,7 +864,7 @@ def q_knn_cellring(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a per-call full scan."""
     out = knn_join_cellring(
         _images_fp(spark, sf_dir),
-        _knn_query_points(sf_dir),
+        synth.knn_query_points(sf_dir),
         k=5,
         res=8,
         ring_radius=None,
@@ -956,7 +880,7 @@ def q_knn_cellring_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform-density corpora; the adaptive mode above is the default."""
     out = knn_join_cellring(
         _images_fp(spark, sf_dir),
-        _knn_query_points(sf_dir),
+        synth.knn_query_points(sf_dir),
         k=5,
         res=8,
         ring_radius=16,
@@ -1295,19 +1219,12 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection granularity — max is associative, so this is byte-identical
     to building per (collection, tile) and max-merging up (the two-level
     rollup test_sketches.py pins and streaming/extents.py uses for
-    incremental maintenance), and map-side partial aggregation bounds the
-    shuffle to <= m rows per group per partition either way; the fused form
-    drops one exchange + one aggregate stage (r6: 2.85s -> 2.65s at sf0.1,
-    A/B interleaved, output assert_frame_equal-exact). The sketch state is
-    the mergeable catalog statistic a 10^12-image table needs where an
-    exact distinct would shuffle every key (operators/sketches.py)."""
-    from stac_catalog_builder_spark.operators.sketches import (
-        hll_estimate,
-        hll_registers,
-    )
+    incremental maintenance). The sketch state is the mergeable catalog
+    statistic a 10^12-image table needs where an exact distinct would
+    shuffle every key (operators/sketches.py)."""
+    from stac_catalog_builder_spark.operators.sketches import hll_distinct
 
-    regs = hll_registers(_assigned(spark, sf_dir), ["collection_id"], "phash")
-    return hll_estimate(regs, ["collection_id"])
+    return hll_distinct(_assigned(spark, sf_dir), ["collection_id"], "phash")
 
 
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1956,7 +1873,7 @@ def q_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_catalog_builder_spark.operators.composite import rasterize_polygons
 
     out = rasterize_polygons(
-        spark, _boundary_polygons(spark, sf_dir), tile_cells=64, cell_micro=640
+        spark, synth.boundary_polygons(sf_dir), tile_cells=64, cell_micro=640
     )
     return out.select(
         "tile_x",
@@ -2004,7 +1921,7 @@ def q_masked_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     comps = composite_tiles(imgs, tile_cells=64).localCheckpoint(eager=False)
     masks = rasterize_polygons(
         spark,
-        _boundary_polygons(spark, sf_dir),
+        synth.boundary_polygons(sf_dir),
         tile_cells=64,
         cell_micro=10,
         tiles=comps.select("tile_x", "tile_y"),

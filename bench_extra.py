@@ -108,6 +108,7 @@ def main():
     args = ap.parse_args()
 
     import __spark_entry__ as e
+    from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators.spatial_join import prepare_polygon_dim
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
@@ -116,7 +117,7 @@ def main():
     names = BENCH_QUERIES + ["flagship"] if args.all else args.names
     dim = None
     if "flagship" in names:
-        dim = prepare_polygon_dim(spark, e._boundary_polygons(spark, args.sf_dir))
+        dim = prepare_polygon_dim(spark, synth.boundary_polygons(args.sf_dir))
 
     import numpy as np
 

@@ -40,7 +40,6 @@ def run_single(cores: int, replicate: int, sf_dir: str) -> dict:
     )
     from stac_catalog_builder_spark.operators.tiling import with_tile
     from stac_catalog_builder_spark.session import get_spark
-    import __spark_entry__ as e
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     spark = get_spark(
@@ -79,7 +78,7 @@ def run_single(cores: int, replicate: int, sf_dir: str) -> dict:
     )
     images = spark.read.parquet(str(staged))
     n = images.count()
-    dim = prepare_polygon_dim(spark, e._boundary_polygons(spark, sf_dir), cover_res=5)
+    dim = prepare_polygon_dim(spark, synth.boundary_polygons(sf_dir), cover_res=5)
 
     def job() -> None:
         # exactly the BASELINE metric: spatial join + tile assignment, all

@@ -12,6 +12,7 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as e  # noqa: E402
+from stac_catalog_builder_spark import synth  # noqa: E402
 from stac_catalog_builder_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -71,7 +72,7 @@ def main() -> None:
     )
     from stac_catalog_builder_spark.operators.tiling import with_tile
 
-    dim = prepare_polygon_dim(spark, e._boundary_polygons(spark, SF))
+    dim = prepare_polygon_dim(spark, synth.boundary_polygons(SF))
     flagship = with_tile(
         spatial_join_pip(e._images_fp(spark, SF), dim=dim), zoom=6
     ).select("image_id", "tile_id", "collection_id", "tile_x", "tile_y")

@@ -71,24 +71,6 @@ def point_in_polygon_np(
     return (crossings.sum(axis=1) % 2).astype(bool)
 
 
-def points_in_polygons_np(
-    px: np.ndarray,
-    py: np.ndarray,
-    poly_idx: np.ndarray,
-    polygons: list[tuple[np.ndarray, np.ndarray]],
-) -> np.ndarray:
-    """PIP for (point, candidate-polygon) pairs: ``poly_idx[i]`` selects the
-    polygon tested against point i. ``polygons`` is the broadcast list of
-    prepared (x_vertices, y_vertices) arrays."""
-    out = np.zeros(len(px), dtype=bool)
-    poly_idx = np.asarray(poly_idx)
-    for j, (vx, vy) in enumerate(polygons):
-        m = poly_idx == j
-        if m.any():
-            out[m] = point_in_polygon_np(px[m], py[m], vx, vy)
-    return out
-
-
 def polygon_bounds(poly_x, poly_y) -> tuple[float, float, float, float]:
     return (
         float(np.min(poly_x)),

@@ -135,20 +135,6 @@ def connected_components(
     # old structure spent a count job plus a guaranteed first round
     converged, nodes, n_in = _probe_round(edges)
 
-    # Size-adaptive round parallelism (guide §2.2: fewer, larger reduce
-    # partitions): each star round is 6-8 tiny exchanges over the edge set,
-    # and running them at the session-wide shuffle partition count pays map
-    # outputs x partitions block overhead per round for data that is a few
-    # MB at the tail of convergence. Derive the round partition count from
-    # the PROBED edge count (~1M edges / 16 MB per partition, floor 8) and
-    # never exceed the session setting — at production edge counts this is
-    # the session default, so it is a small-graph adaptation, not a local
-    # tune. Measured at sf0.1 (38k edges): 3 rounds 1.7-3.1s -> ~1.5s.
-    spark = edges.sparkSession
-    part_key = "spark.sql.shuffle.partitions"
-    sess_parts = int(spark.conf.get(part_key))
-    round_parts = min(sess_parts, max(8, n_in // 1_000_000 + 1))
-
     def star_round(e: DataFrame) -> DataFrame:
         # large-star: symmetric neighborhoods; each neighbor y > x links to
         # m* = min(N(x) ∪ {x}) — keeps big stars from growing. Per-x min via
@@ -196,17 +182,11 @@ def connected_components(
     # duplicated round subtrees do not collapse into reused exchanges, so
     # the chained plan re-executes them as extra adaptive jobs.
     rounds = 0
-    try:
-        if round_parts != sess_parts:
-            spark.conf.set(part_key, str(round_parts))
-        while not converged and rounds < max_iter:
-            rounds += 1
-            new_edges = star_round(edges).localCheckpoint(eager=False)
-            converged, nodes, _ = _probe_round(new_edges)
-            edges = new_edges
-    finally:
-        if round_parts != sess_parts:
-            spark.conf.set(part_key, str(sess_parts))
+    while not converged and rounds < max_iter:
+        rounds += 1
+        new_edges = star_round(edges).localCheckpoint(eager=False)
+        converged, nodes, _ = _probe_round(new_edges)
+        edges = new_edges
 
     if not converged:
         warnings.warn(

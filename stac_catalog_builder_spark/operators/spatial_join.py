@@ -10,11 +10,8 @@ Two-stage, the standard distributed spatial-join shape:
 2. **Exact PIP refinement**: the even-odd ray cast runs as a pure JVM
    higher-order-function expression (``filter`` over edge indices against
    the polygon vertex arrays carried on the broadcast row) — whole-stage
-   codegen'd, zero Python in the hot path. Measured on this host the JVM
-   refine scales with cores while a pandas-UDF refine *anti-scales* past ~8
-   local cores (python worker contention), so the UDF variant
-   (``spatial_join_pip_udf``) is kept only as the extension slot for
-   geometry kernels SQL can't express.
+   codegen'd, zero Python in the hot path (a pandas-UDF refine measured
+   slower and *anti-scaled* past ~8 local cores: python worker contention).
 
 Skew: a hot cell (a dense city) maps to ONE cover row, so the broadcast join
 cannot skew the fact side (there is no shuffle). Skew matters only for
@@ -31,14 +28,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.cells import grid_bounds_np, grid_cell_col, grid_cover_bbox
-from ..functions.geo import (
-    point_in_polygon_np,
-    points_in_polygons_np,
-    polygon_bounds,
-)
+from ..functions.geo import point_in_polygon_np, polygon_bounds
 
 DEFAULT_COVER_RES = 7  # ~1.4-degree cells. Higher res = more cover rows
 # (still dimension-sized) but a smaller boundary fraction: only images in
@@ -84,6 +76,20 @@ def _cells_fully_inside(cells: np.ndarray, vx: np.ndarray, vy: np.ndarray) -> np
     return inside & ~edge_hit
 
 
+def _polygon_cover(
+    ring_x, ring_y, cover_res: int
+) -> tuple[list[int], list[bool]]:
+    """A polygon's bbox cover cells at ``cover_res`` and, per cell, whether
+    it lies FULLY inside the polygon: rows landing in a full cell need no
+    exact refinement — only the boundary-cell fraction (~perimeter/area)
+    pays the ray cast."""
+    vx = np.asarray(ring_x, dtype=np.float64)
+    vy = np.asarray(ring_y, dtype=np.float64)
+    w, s, e, n = polygon_bounds(vx, vy)
+    cells = np.asarray(grid_cover_bbox(w, s, e, n, cover_res), dtype=np.int64)
+    return cells.tolist(), _cells_fully_inside(cells, vx, vy).tolist()
+
+
 def ray_cast_col(
     lon: Column, lat: Column, ring_x: Column, ring_y: Column, max_vertices: int = 16
 ) -> Column:
@@ -97,7 +103,7 @@ def ray_cast_col(
     and measurably ANTI-scale under many local cores (GC contention); the
     unrolled form is a plain codegen'd expression tree. Polygons are
     dimension-table rows, so a small vertex cap is fine (boundary rings, not
-    coastlines — larger rings belong in spatial_join_pip_udf).
+    coastlines).
 
     Horizontal edges are excluded by the straddle test; double division by
     zero yields +/-Inf (never an error in ANSI mode), so no special-casing.
@@ -119,16 +125,22 @@ def ray_cast_col(
     return crossings % 2 == 1
 
 
-def _prepare_dimension(
-    spark, polygons: list[dict], cover_res: int, keep_cols: tuple[str, ...]
-):
-    """Driver-side prep of the broadcastable polygon dimension: cover rows
-    (cell, poly_idx) and meta rows (poly_idx, keep_cols, ring arrays)."""
-    cover_rows, meta_rows, prepared = [], [], []
+def prepare_polygon_dim(
+    spark,
+    polygons: list[dict],
+    cover_res: int = DEFAULT_COVER_RES,
+    keep_cols: tuple[str, ...] = ("tile_id", "collection_id"),
+) -> dict:
+    """One-time driver-side polygon dimension prep: cover rows (cell,
+    poly_idx, is_full) and meta rows (poly_idx, keep_cols, ring arrays) as
+    broadcastable frames. Reuse across many joins — the per-query cost is
+    then only the broadcast exchange."""
+    cover_rows, meta_rows = [], []
     for idx, poly in enumerate(polygons):
         vx = np.asarray(poly["ring_x"], dtype=np.float64)
         vy = np.asarray(poly["ring_y"], dtype=np.float64)
-        prepared.append((vx, vy))
+        cells, full = _polygon_cover(vx, vy, cover_res)
+        cover_rows.extend((c, idx, f) for c, f in zip(cells, full))
         meta_rows.append(
             {
                 "poly_idx": idx,
@@ -137,36 +149,12 @@ def _prepare_dimension(
                 **{c: poly[c] for c in keep_cols},
             }
         )
-        w, s, e, n = polygon_bounds(vx, vy)
-        cells = np.asarray(grid_cover_bbox(w, s, e, n, cover_res), dtype=np.int64)
-        # interior/boundary classification: rows landing in a cell that is
-        # FULLY inside the polygon need no exact refinement — only the
-        # boundary-cell fraction (~perimeter/area) pays the ray cast.
-        full = _cells_fully_inside(cells, vx, vy)
-        cover_rows.extend(
-            (int(c), idx, bool(f)) for c, f in zip(cells.tolist(), full.tolist())
-        )
-    cover_df = spark.createDataFrame(
-        cover_rows, schema="cover_cell bigint, poly_idx int, is_full boolean"
-    )
-    meta_df = spark.createDataFrame(pd.DataFrame(meta_rows))
-    return cover_df, meta_df, prepared
-
-
-def prepare_polygon_dim(
-    spark,
-    polygons: list[dict],
-    cover_res: int = DEFAULT_COVER_RES,
-    keep_cols: tuple[str, ...] = ("tile_id", "collection_id"),
-) -> dict:
-    """One-time driver-side polygon dimension prep (cover classification +
-    broadcastable frames). Reuse across many joins — the per-query cost is
-    then only the broadcast exchange."""
-    cover_df, meta_df, prepared = _prepare_dimension(spark, polygons, cover_res, keep_cols)
     return {
-        "cover_df": cover_df,
-        "meta_df": meta_df,
-        "max_v": max(len(vx) for vx, _ in prepared),
+        "cover_df": spark.createDataFrame(
+            cover_rows, schema="cover_cell bigint, poly_idx int, is_full boolean"
+        ),
+        "meta_df": spark.createDataFrame(pd.DataFrame(meta_rows)),
+        "max_v": max(len(m["ring_x"]) for m in meta_rows),
         "cover_res": cover_res,
     }
 
@@ -217,45 +205,6 @@ def spatial_join_pip(
     return refined.drop("poly_idx", "cover_cell", "ring_x", "ring_y", "is_full")
 
 
-def spatial_join_pip_udf(
-    images: DataFrame,
-    polygons: list[dict],
-    cover_res: int = DEFAULT_COVER_RES,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    keep_cols: tuple[str, ...] = ("tile_id", "collection_id"),
-) -> DataFrame:
-    """Pandas-UDF refine variant: prepared vertex arrays ride in a Spark
-    broadcast variable, batches tested with numpy ray casting. Identical
-    output to ``spatial_join_pip`` (pytest-verified); use it only for
-    geometry kernels that exceed SQL expressions — the JVM path is faster AND
-    scales better (the UDF's python workers contend past ~8 cores/executor).
-    """
-    spark = images.sparkSession
-    cover_df, meta_df, prepared = _prepare_dimension(
-        spark, polygons, cover_res, keep_cols
-    )
-    bc = spark.sparkContext.broadcast(prepared)
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(px: pd.Series, py: pd.Series, pidx: pd.Series) -> pd.Series:
-        return pd.Series(
-            points_in_polygons_np(px.to_numpy(), py.to_numpy(), pidx.to_numpy(), bc.value)
-        )
-
-    candidates = images.withColumn(
-        "cover_cell", grid_cell_col(F.col(lon_col), F.col(lat_col), cover_res)
-    ).join(F.broadcast(cover_df), "cover_cell")
-    refined = candidates.where(
-        F.when(F.col("is_full"), F.lit(True)).otherwise(
-            pip(F.col(lon_col), F.col(lat_col), F.col("poly_idx"))
-        )
-    )
-    return refined.join(
-        F.broadcast(meta_df.drop("ring_x", "ring_y")), "poly_idx"
-    ).drop("poly_idx", "cover_cell", "is_full")
-
-
 def spatial_join_pip_partitioned(
     images: DataFrame,
     polygons_df: DataFrame,
@@ -291,17 +240,11 @@ def spatial_join_pip_partitioned(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                vx = np.asarray(r.ring_x, dtype=np.float64)
-                vy = np.asarray(r.ring_y, dtype=np.float64)
-                w, s, e, n = polygon_bounds(vx, vy)
-                cells = np.asarray(
-                    grid_cover_bbox(w, s, e, n, cover_res), dtype=np.int64
-                )
-                full = _cells_fully_inside(cells, vx, vy)
+                cells, full = _polygon_cover(r.ring_x, r.ring_y, cover_res)
                 pid = getattr(r, poly_id_col)
                 rows.extend(
-                    {"cover_cell": int(c), poly_id_col: pid, "is_full": bool(f)}
-                    for c, f in zip(cells.tolist(), full.tolist())
+                    {"cover_cell": c, poly_id_col: pid, "is_full": f}
+                    for c, f in zip(cells, full)
                 )
             yield pd.DataFrame(
                 rows, columns=["cover_cell", poly_id_col, "is_full"]
@@ -357,30 +300,6 @@ def spatial_join_bbox_overlap(
         & (F.col("fp_e") > boxes.bbox_w)
         & (F.col("fp_s") < boxes.bbox_n)
         & (F.col("fp_n") > boxes.bbox_s)
-    )
-    return images.join(F.broadcast(boxes), cond, "inner").drop(
-        "bbox_w", "bbox_s", "bbox_e", "bbox_n"
-    )
-
-
-def spatial_join_bbox(
-    images: DataFrame,
-    boxes: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Rectangle fast path: broadcast range join with half-open semantics
-    (w <= lon < e, s <= lat < n) — pure JVM expressions, no cover stage.
-
-    ``boxes`` must carry bbox_w/bbox_s/bbox_e/bbox_n. Use when boundaries are
-    axis-aligned (tile grids): Catalyst plans a broadcast nested-loop join
-    with a cheap residual predicate.
-    """
-    cond = (
-        (F.col(lon_col) >= boxes.bbox_w)
-        & (F.col(lon_col) < boxes.bbox_e)
-        & (F.col(lat_col) >= boxes.bbox_s)
-        & (F.col(lat_col) < boxes.bbox_n)
     )
     return images.join(F.broadcast(boxes), cond, "inner").drop(
         "bbox_w", "bbox_s", "bbox_e", "bbox_n"

@@ -29,25 +29,12 @@ from pyspark.sql import functions as F
 
 from .. import synth
 from ..functions.cells import grid_cell_col
-from ..functions.geo import rect_ring
 from ..operators.footprints import with_footprint
 from ..operators.grouping import collection_extents, collection_rollup, items_from_assets
 from ..operators.spatial_join import prepare_polygon_dim, spatial_join_pip
 from ..operators.tiling import with_tile
 from ..sources.catalog import write_items_partitioned
 from ..sources.checkpoint import SnapshotStore
-
-
-def boundary_polygons(spark: SparkSession, sf_dir: str) -> list[dict]:
-    rows = synth.boundaries(spark, sf_dir).collect()
-    out = []
-    for r in rows:
-        rx, ry = rect_ring(r.bbox_w, r.bbox_s, r.bbox_e, r.bbox_n)
-        out.append(
-            {"ring_x": rx, "ring_y": ry, "tile_id": r.tile_id,
-             "collection_id": r.collection_id}
-        )
-    return out
 
 
 def build_catalog(
@@ -73,7 +60,7 @@ def build_catalog(
         "cell", grid_cell_col(F.col("lon"), F.col("lat"), cell_res)
     )
 
-    dim = prepare_polygon_dim(spark, boundary_polygons(spark, sf_dir))
+    dim = prepare_polygon_dim(spark, synth.boundary_polygons(sf_dir))
     assigned = spatial_join_pip(images, dim=dim)
     tiled = with_tile(assigned, zoom=zoom)
 

@@ -16,10 +16,10 @@ Resume = left_anti join of the pending work's partition keys against
 so a re-run only computes missing partitions.
 
 Exactly-once per partition:
-- the data write uses **dynamic partition overwrite**
-  (``spark.sql.sources.partitionOverwriteMode=dynamic`` + ``mode("overwrite")``)
-  so a crash-retry *replaces* a partially-committed partition instead of
-  appending duplicate rows;
+- the data write uses **dynamic partition overwrite** (the writer option
+  ``partitionOverwriteMode=dynamic`` + ``mode("overwrite")``; the session
+  conf is never touched) so a crash-retry *replaces* a partially-committed
+  partition instead of appending duplicate rows;
 - ``_metrics`` and ``_lineage`` are themselves partitioned by ``part_key``
   and written with dynamic overwrite, so every step of the commit protocol is
   an idempotent per-partition upsert — any crash/retry interleaving converges
@@ -32,9 +32,10 @@ parquet footer metadata), never by re-running the upstream stage DAG — a
 naive ``df.count()``-style metrics pass would double the cost of every
 checkpointed write.
 
-Partition keys round-trip as **strings** (their Hive directory form);
-partition-column type inference is disabled on read so keys are stable and
-engine-independent.
+Partition keys round-trip as **strings** (their Hive directory form): the
+store's own readbacks pass a schema with the key as a string, and the
+schema-less read disables partition-column type inference, so keys are
+stable and engine-independent ("007" stays "007", never 7).
 """
 
 from __future__ import annotations
@@ -47,7 +48,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 _INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
 
 
@@ -62,34 +62,35 @@ def _dynamic_overwrite(
     file to every directory (N*P small files at scale; fully serial when
     the input is a single-row-group scan). Skipped for the dimension-sized
     metrics/lineage upserts, where a shuffle is pure overhead."""
-    spark = df.sparkSession
     if cluster:
         df = df.repartition(F.col(part_col))
-    prev = spark.conf.get(_OVERWRITE_MODE_KEY, "static")
-    spark.conf.set(_OVERWRITE_MODE_KEY, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(part_col).parquet(str(path))
-    finally:
-        spark.conf.set(_OVERWRITE_MODE_KEY, prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(str(path))
+    )
 
 
 def _read_keyed(
     spark: SparkSession, path: Path, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Read a part_key-partitioned table with type inference OFF, so the
-    partition key always comes back as the string written in the dir name.
+    """Read a part_key-partitioned table so the partition key always comes
+    back as the string written in the dir name.
 
     ``schema``: the known readback schema (data columns in file order, the
     partition column LAST as string — what inference would produce). The
     store wrote every table it reads back, so the schema is available
-    without Spark's 1-task footer-inference job per read; callers that
-    cannot know it (external tables) pass None and pay inference.
+    without Spark's 1-task footer-inference job per read, and it fixes the
+    key's type without touching session conf. Callers that cannot know it
+    (external tables) pass None and pay inference, with partition-column
+    type inference switched off for the read.
     tests/test_checkpoint.py pins known-schema == inferred-schema reads."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(str(path))
     prev = spark.conf.get(_INFER_KEY, "true")
     spark.conf.set(_INFER_KEY, "false")
     try:
-        if schema is not None:
-            return spark.read.schema(schema).parquet(str(path))
         return spark.read.parquet(str(path))
     finally:
         spark.conf.set(_INFER_KEY, prev)

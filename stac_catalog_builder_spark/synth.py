@@ -23,13 +23,19 @@ Derivation (FIXTURES.md §1):
   (reference tests/test_builder.py:242-244: 12 assets -> 6 items).
 All boundary constants are chosen OFF the data lattice (5-decimal offsets vs
 3/4-decimal data) so point-in-polygon has no boundary ties between engines.
+
+The two 25-row dimensions (boundary rectangles, kNN query points) are
+derived once, driver-side in plain Python from ``nation``; their Spark
+DataFrames (``boundaries``, ``knn_queries``) are built over those rows.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.geo import rect_ring
 from .session import read_parquet
 
 # --- shared constants (mirrored in oracles.py SQL and numpy fixtures) ---
@@ -169,6 +175,55 @@ def images(
     )
 
 
+def _nation_keys(sf_dir: str) -> tuple[list[int], list[int]]:
+    """``(n_nationkey, n_regionkey)`` in file order. Both 25-row dimensions
+    derive from ``nation`` driver-side: a pyarrow read is ~5ms, where a
+    Spark scan + collect is a whole job (~0.25-0.4s warm) per query."""
+    import pyarrow.parquet as pq
+
+    tab = pq.read_table(
+        f"{sf_dir}/nation.parquet", columns=["n_nationkey", "n_regionkey"]
+    )
+    return (
+        tab.column("n_nationkey").to_pylist(),
+        tab.column("n_regionkey").to_pylist(),
+    )
+
+
+def _boundary_rows(sf_dir: str) -> list[tuple]:
+    rows = []
+    for nk, rk in zip(*_nation_keys(sf_dir)):
+        tx, ty = nk % GRID_NX, nk // GRID_NX
+        rows.append(
+            (
+                f"E{tx}N{ty}",
+                f"coll_{rk}",
+                GRID_LON0 + tx * GRID_DLON,
+                GRID_LAT0 + ty * GRID_DLAT,
+                GRID_LON0 + (tx + 1) * GRID_DLON,
+                GRID_LAT0 + (ty + 1) * GRID_DLAT,
+            )
+        )
+    return rows
+
+
+def boundary_polygons(sf_dir: str) -> list[dict]:
+    """The boundary dimension as rectangle rings, the input of
+    ``spatial_join.prepare_polygon_dim``."""
+    polys = []
+    for tile_id, collection_id, w, s, e, n in _boundary_rows(sf_dir):
+        rx, ry = rect_ring(w, s, e, n)
+        polys.append(
+            {
+                "ring_x": rx,
+                "ring_y": ry,
+                "tile_id": tile_id,
+                "collection_id": collection_id,
+            }
+        )
+    return polys
+
+
 def boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boundary/tile dimension table: one rectangle per ``nation`` row.
 
@@ -176,41 +231,33 @@ def boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark analogue of the reference's item→collection association
     (builder.py:470-475). Tiny (25 rows): always broadcast.
     """
-    nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
-    j = F.col("n_nationkey")
-    tx = (j % GRID_NX).cast("int")
-    ty = F.expr(f"n_nationkey div {GRID_NX}").cast("int")
-    return nation.select(
-        F.concat(F.lit("E"), tx.cast("string"), F.lit("N"), ty.cast("string")).alias(
-            "tile_id"
-        ),
-        F.concat(F.lit("coll_"), F.col("n_regionkey").cast("string")).alias(
-            "collection_id"
-        ),
-        (F.lit(GRID_LON0) + tx * F.lit(GRID_DLON)).alias("bbox_w"),
-        (F.lit(GRID_LAT0) + ty * F.lit(GRID_DLAT)).alias("bbox_s"),
-        (F.lit(GRID_LON0) + (tx + 1) * F.lit(GRID_DLON)).alias("bbox_e"),
-        (F.lit(GRID_LAT0) + (ty + 1) * F.lit(GRID_DLAT)).alias("bbox_n"),
+    return spark.createDataFrame(
+        _boundary_rows(sf_dir),
+        "tile_id string, collection_id string, bbox_w double, bbox_s double, "
+        "bbox_e double, bbox_n double",
     )
 
 
-def knn_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN query points: one per nation row, scrambled placement, k=5.
+def knn_query_points(sf_dir: str) -> pd.DataFrame:
+    """kNN query points (query_id, qlon, qlat): one per nation row,
+    scrambled placement, k=5. A fifth of the points land inside the hot
+    cluster (FIXTURES.md §4)."""
+    qid, qlon, qlat = [], [], []
+    for n in _nation_keys(sf_dir)[0]:
+        qk = n + 101
+        h1, h2 = (qk * A_LON) % M32, (qk * A_LAT) % M32
+        if n % 5 == 0:
+            qlon.append(HOT_LON0 + (h1 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
+            qlat.append(HOT_LAT0 + (h2 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
+        else:
+            qlon.append(-180.0 + (h1 % LON_STEPS) / STEP_SCALE)
+            qlat.append(-60.0 + (h2 % LAT_STEPS) / STEP_SCALE)
+        qid.append(f"q_{n:04d}")
+    return pd.DataFrame({"query_id": qid, "qlon": qlon, "qlat": qlat})
 
-    A fifth of the points land inside the hot cluster (FIXTURES.md §4).
-    """
-    nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
-    qk = F.col("n_nationkey") + F.lit(101)
-    h1, h2 = _h1(qk), _h2(qk)
-    hot = (F.col("n_nationkey") % 5) == 0
-    lon = F.when(
-        hot, F.lit(HOT_LON0) + (h1 % HOT_JITTER_STEPS) / F.lit(HOT_JITTER_SCALE)
-    ).otherwise(F.lit(-180.0) + (h1 % LON_STEPS) / F.lit(STEP_SCALE))
-    lat = F.when(
-        hot, F.lit(HOT_LAT0) + (h2 % HOT_JITTER_STEPS) / F.lit(HOT_JITTER_SCALE)
-    ).otherwise(F.lit(-60.0) + (h2 % LAT_STEPS) / F.lit(STEP_SCALE))
-    return nation.select(
-        F.format_string("q_%04d", F.col("n_nationkey")).alias("query_id"),
-        lon.alias("qlon"),
-        lat.alias("qlat"),
+
+def knn_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``knn_query_points`` as a Spark DataFrame."""
+    return spark.createDataFrame(
+        knn_query_points(sf_dir), "query_id string, qlon double, qlat double"
     )

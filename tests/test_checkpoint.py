@@ -31,13 +31,22 @@ def test_write_then_read_stage(spark, store):
 
 
 def test_pending_anti_join(spark, store):
+    from stac_catalog_builder_spark.sources import checkpoint as cp
+
+    overwrite_key = "spark.sql.sources.partitionOverwriteMode"
+    confs = {k: spark.conf.get(k) for k in (overwrite_key, cp._INFER_KEY)}
+    assert confs[cp._INFER_KEY] == "true"  # inference left on
+    # "007" is zero-padded: an inferred integer key would read back as 7
     df = spark.range(10).select(
         (F.col("id") % 2).cast("string").alias("part_key"), F.col("id").alias("v")
-    )
+    ).unionByName(spark.createDataFrame([("007", 99)], "part_key string, v bigint"))
     store.write_stage(df, "s2", "part_key")
-    work = _work(spark, ["0", "1", "2", "3"])
+    assert {k: spark.conf.get(k) for k in confs} == confs
+    work = _work(spark, ["0", "1", "2", "3", "007", "7"])
     pending = store.pending(work, spark, "s2", "part_key").collect()
-    assert sorted(r.part_key for r in pending) == ["2", "3"]
+    assert sorted(r.part_key for r in pending) == ["2", "3", "7"]
+    m = {r.part_key: r.n_rows for r in store.metrics(spark, "s2").collect()}
+    assert m == {"0": 5, "1": 5, "007": 1}
 
 
 def test_run_resumable_computes_only_missing(spark, store):

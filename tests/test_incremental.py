@@ -14,7 +14,7 @@ from stac_catalog_builder_spark.operators.grouping import (
     incremental_extents,
     merge_extent_summaries,
 )
-from stac_catalog_builder_spark.operators.spatial_join import spatial_join_bbox
+from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
 
 SF = "/root/testdata/sf0.001"
 KEYS = ["collection_id", "tile_id"]
@@ -29,8 +29,8 @@ def _rows(df):
 
 
 def test_incremental_equals_full_recompute(spark):
-    assigned = spatial_join_bbox(
-        with_footprint(synth.images(spark, SF)), synth.boundaries(spark, SF)
+    assigned = spatial_join_pip(
+        with_footprint(synth.images(spark, SF)), synth.boundary_polygons(SF)
     )
     base = assigned.where(F.col("img_key") % 3 == 0)
     inc1 = assigned.where(F.col("img_key") % 3 == 1)
@@ -52,8 +52,8 @@ def test_incremental_equals_full_recompute(spark):
 
 
 def test_merge_extent_summaries_nary_and_guard(spark):
-    assigned = spatial_join_bbox(
-        with_footprint(synth.images(spark, SF)), synth.boundaries(spark, SF)
+    assigned = spatial_join_pip(
+        with_footprint(synth.images(spark, SF)), synth.boundary_polygons(SF)
     )
     parts = [
         collection_extents(assigned.where(F.col("img_key") % 4 == i), KEYS)

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as e
+from stac_catalog_builder_spark import synth
 
 SF = "/root/testdata/sf0.001"
 
@@ -30,7 +31,7 @@ def flagship_plan(spark):
     )
     from stac_catalog_builder_spark.operators.tiling import with_tile
 
-    dim = prepare_polygon_dim(spark, e._boundary_polygons(spark, SF))
+    dim = prepare_polygon_dim(spark, synth.boundary_polygons(SF))
     assigned = spatial_join_pip(e._images_fp(spark, SF), dim=dim)
     tiled = with_tile(assigned, zoom=6).select(
         "image_id", "tile_id", "collection_id", "tile_x", "tile_y"

@@ -10,7 +10,11 @@ pinned exactly here.
 
 from __future__ import annotations
 
+from glob import glob
+from pathlib import Path
+
 import pytest
+from conftest import SF0001
 
 from stac_catalog_builder_spark.session import read_parquet
 
@@ -20,7 +24,7 @@ TABLES = (
 ).split()
 
 
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
+@pytest.mark.parametrize("sf_dir", sorted(glob(str(Path(SF0001).parent / "sf*"))))
 def test_read_parquet_schema_matches_inference(spark, sf_dir):
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
