@@ -61,7 +61,7 @@ def with_minhash(df: DataFrame, text_col: str = "text", bands: int = 16) -> Data
 
 
 def _exact_collapse(
-    df: DataFrame, key_col: str, payload_col: str, hash_expr=None, tag: str | None = None
+    df: DataFrame, key_col: str, payload_col: str, tag: str, hash_expr=None
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse exactly-identical payloads to one representative (min key).
 
@@ -90,16 +90,11 @@ def _exact_collapse(
     # 10^9 rows into one window task) and AQE skew-join splits the hot _ch
     # on the join; collect_list of members would not survive either
     reps_key = hashed.groupBy("_ch").agg(F.min(key_col).alias("_rep"))
-    members = hashed.join(reps_key, "_ch")
-    if tag is not None:
-        # persist the collapse output: both downstream consumers (reps ->
-        # the signature/bucket cache, star -> the result union) AND the
-        # caller's eager salting-stats job read from it. Without the cache
-        # the md5 groupBy + join-back shuffle runs once in the stats job and
-        # again in the result job — exchange reuse does not cross job
-        # boundaries (the r3 minhash/simhash 1.5-2x regression, VERDICT r3
-        # #2 / What's-wrong #2).
-        members = cache.scoped_persist(f"{tag}_members", members)
+    # persist the collapse output: it feeds both reps (-> the signature
+    # table) and star (-> the result union). Measured at 4 cores, a
+    # minhash + simhash + dedup_groups pass without this cache costs about
+    # 2 cpu-s more (3 of 3 alternating rounds)
+    members = cache.scoped_persist(f"{tag}_members", hashed.join(reps_key, "_ch"))
     star = members.where(F.col(key_col) != F.col("_rep")).select(
         F.col("_rep").alias("id_a"), F.col(key_col).alias("id_b")
     )
@@ -108,13 +103,16 @@ def _exact_collapse(
 
 
 # Last-call salting stats per operator tag — the observable signal that
-# recall became approximate (ADVICE r2): {oversized_buckets, rows_in_oversized,
-# max_bucket}. Zero oversized buckets == the candidate set is exact.
-SALT_METRICS: dict[str, dict] = {}
+# recall became approximate (ADVICE r2): an unevaluated one-row frame with
+# columns (oversized_buckets, rows_in_oversized, max_bucket), evaluated only
+# when the caller reads its row. Zero oversized buckets == the candidate set
+# is exact. Read it before releasing the operator's scoped cache: after
+# cache.release the read recomputes the whole signature pipeline.
+SALT_METRICS: dict[str, DataFrame] = {}
 
 
 def _salt_hot_buckets(
-    bucketed: DataFrame, key_col: str, max_bucket: int, tag: str = "default"
+    bucketed: DataFrame, key_col: str, max_bucket: int, tag: str
 ) -> DataFrame:
     """Split buckets larger than ``max_bucket`` into deterministic salted
     sub-buckets (pairs survive only within a sub-bucket). Bounds
@@ -122,40 +120,24 @@ def _salt_hot_buckets(
     hot-bucket guard at 100 TB. Exact duplicates never reach here (collapsed
     upstream), so oversized buckets are *distinct* payloads colliding.
 
-    Observability without driver risk (ADVICE r3/r4): the recall trade is
-    recorded in ``SALT_METRICS[tag]`` (0 oversized => candidates exact),
-    and only a SINGLE summary row (count/sum over the oversized subset)
-    ever reaches the driver unconditionally. The salting join itself is
-    broadcast ONLY when the same stats probe proves the oversized set is
-    dimension-sized (a broadcast hint still collects its side driver-side
-    first); an adversarial distribution with ~total_rows/max_bucket hot
-    buckets instead takes a plain shuffle join — slower, never driver-OOM.
-    The all-buckets-small common case still skips the salting join
-    entirely. ``bucketed`` should be persisted by the caller: the stats
-    probe is an extra eager job over it."""
+    One plan for every input, and no Spark job at call time: the oversized
+    bucket sizes (a map-side-combined aggregate) are left-joined back
+    without a hint, so AQE picks broadcast or shuffle from their runtime
+    size, and ``salt = pmod(xxhash64(key), ceil(coalesce(_bn, 1) /
+    max_bucket))`` is 0 for every bucket that is not oversized. The recall
+    trade is recorded in ``SALT_METRICS[tag]`` as a lazy one-row summary
+    over the same aggregate (0 oversized => candidates exact)."""
     over = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("_bn")).where(
         F.col("_bn") > max_bucket
     )
-    stats = over.agg(
-        F.count(F.lit(1)).alias("n_over"),
-        F.coalesce(F.sum("_bn"), F.lit(0)).alias("rows_over"),
-    ).first()
-    SALT_METRICS[tag] = {
-        "oversized_buckets": int(stats["n_over"]),
-        "rows_in_oversized": int(stats["rows_over"]),
-        "max_bucket": max_bucket,
-    }
-    if stats["n_over"] == 0:
-        return bucketed.withColumn("salt", F.lit(0).cast("int"))
-    # ~16 bytes/row of (bucket, count): 1e6 rows ≈ 16 MB broadcast — safe.
-    # Past that, let the optimizer pick (AQE will still broadcast if small
-    # by its own size estimate, and shuffle-join otherwise).
-    dim = F.broadcast(over) if stats["n_over"] <= 1_000_000 else over
-    out = bucketed.join(dim, "bucket", "left")
-    salt = F.when(F.col("_bn").isNull(), F.lit(0)).otherwise(
-        F.pmod(F.xxhash64(F.col(key_col)), F.ceil(F.col("_bn") / max_bucket))
+    SALT_METRICS[tag] = over.agg(
+        F.count(F.lit(1)).alias("oversized_buckets"),
+        F.coalesce(F.sum("_bn"), F.lit(0)).alias("rows_in_oversized"),
+        F.lit(max_bucket).alias("max_bucket"),
     )
-    return out.withColumn("salt", salt.cast("int")).drop("_bn")
+    n_sub = F.ceil(F.coalesce(F.col("_bn"), F.lit(1)) / max_bucket)
+    salt = F.pmod(F.xxhash64(F.col(key_col)), n_sub).cast("int")
+    return bucketed.join(over, "bucket", "left").withColumn("salt", salt).drop("_bn")
 
 
 def minhash_candidate_parts(
@@ -181,12 +163,13 @@ def minhash_candidate_parts(
     reps, star = _exact_collapse(
         df.select(key_col, text_col), key_col, text_col, tag="minhash_pairs"
     )
-    # persist the PRE-salt (key, bucket) table: it feeds the bucket-size
-    # aggregation AND both self-join sides — persisting above the salting
-    # join would leave the signature UDF inside the cached plan's own sizes
-    # subtree and run it twice (at scale this cache is the materialized
-    # signature-table stage of any LSH pipeline). Lifecycle: scoped_persist
-    # replaces the previous call's cache; cache.release() frees it.
+    # persist the PRE-salt (key, bucket) signature table: it feeds the
+    # bucket-size aggregate and both self-join sides, and it fences the
+    # plan — without it Catalyst pushes the explode's inferred
+    # ``size(band_keys) > 0`` filter below the collapse join and the
+    # band-key UDF is evaluated in several subtrees (at sf0.01 it then
+    # processes 4x the rows). Lifecycle: scoped_persist replaces the
+    # previous call's cache; cache.release() frees it.
     b = cache.scoped_persist(
         "minhash_pairs",
         with_minhash(reps, text_col, bands).select(
@@ -324,7 +307,6 @@ def hamming_candidate_pairs(
     max_bucket: int = 256,
     tag: str = "hamming_pairs",
     collapse_identical: bool = True,
-    combo_blocks: int | None = None,
     sketch_bits: int = 64,
 ) -> DataFrame:
     """Near-dup candidate pairs for ANY 64-bit sketch column at Hamming
@@ -336,10 +318,10 @@ def hamming_candidate_pairs(
     Web Crawling", WWW'07): the sketch splits into ``max_hamming + t``
     blocks and buckets on every combination of ``t`` blocks' values — two
     sketches within the ball have errors in <= max_hamming blocks, so at
-    least one t-combination agrees exactly. ``t = combo_blocks`` defaults
-    to 1 for small balls (h <= 3: 4+ blocks of 16 bits are entropy-rich)
-    and 2 for h >= 4, where single blocks shrink to <= 9 bits (= <= 512
-    bucket values) and EVERY bucket goes hot at ~10^5 rows — round-5 growth
+    least one t-combination agrees exactly. ``t`` is 1 for small balls
+    (h <= 3: 4+ blocks of 16 bits are entropy-rich) and 2 for h >= 4,
+    where single blocks shrink to <= 9 bits (= <= 512 bucket values) and
+    EVERY bucket goes hot at ~10^5 rows — round-5 growth
     measurement caught exactly that: key-random salting then silently cost
     ~35% of planted recall. Pairing blocks multiplies bucket entropy
     (C(h+2, 2) keys of ~2x the bits) so salting — the only recall trade in
@@ -369,11 +351,8 @@ def hamming_candidate_pairs(
             f"max_hamming must be in [1, 15] (0 == exact match: use "
             f"dedup_exact): {max_hamming}"
         )
-    if combo_blocks is None:
-        combo_blocks = 1 if max_hamming <= 3 else 2
-    if combo_blocks not in (1, 2):
-        raise ValueError(f"combo_blocks must be 1 or 2: {combo_blocks}")
-    n_blocks = max_hamming + combo_blocks
+    t = 1 if max_hamming <= 3 else 2
+    n_blocks = max_hamming + t
     # validate every scalar BEFORE any DataFrame work: _exact_collapse
     # registers a scoped-persist tag, and erroring after that would leave
     # a dangling live cache entry until the next same-tag call
@@ -401,7 +380,7 @@ def hamming_candidate_pairs(
     def block_val(lo: int, hi: int):
         return F.shiftright(sketch_col, lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
 
-    if combo_blocks == 1:
+    if t == 1:
         keys = [
             F.struct(F.lit(i).alias("blk"), block_val(lo, hi).alias("val"))
             for i, (lo, hi) in enumerate(bounds)
@@ -432,10 +411,9 @@ def hamming_candidate_pairs(
         sketch_col,
         F.explode(F.array(*keys)).alias("b"),
     ).select(key_col, sketch_col, bucket.alias("bucket"))
-    # pre-salt persist of the POST-explode block table (same reasoning as
-    # minhash_candidate_pairs): the bucket-size stats job and both self-join
-    # sides consume it — caching upstream of the explode would re-run the
-    # n_blocks-x expansion and the size-agg shuffle per subtree
+    # pre-salt persist of the POST-explode block table: the bucket-size
+    # aggregate and both self-join sides read it, so the n_blocks-x explode
+    # (and any sketch UDF upstream) runs once per row, not once per subtree
     blocks = cache.scoped_persist(tag, blocks)
     blocks = _salt_hot_buckets(blocks, key_col, max_bucket, tag=tag)
     l, r = blocks.alias("l"), blocks.alias("r")
@@ -523,7 +501,7 @@ def embedding_neardup_pairs(
         return pd.Series(hyperplane_sketch(m, n_planes))
 
     # pre-salt persist: the bucket UDF + collapse would otherwise re-run for
-    # the size count and each self-join side
+    # the size aggregate and each self-join side
     b = cache.scoped_persist(
         "embedding_neardup",
         reps.select(key_col, vec_col, bucket(F.col(vec_col)).alias("bucket")),

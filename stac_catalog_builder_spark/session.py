@@ -9,8 +9,12 @@ tuning surface is cores, shuffle partitions and adaptive execution.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+_INFER_NTZ_KEY = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 # Configs chosen for a 1000-executor / 100 TB deployment and scaled down for
 # local[N] tests: AQE re-plans shuffles at runtime (coalesce tiny partitions,
@@ -96,19 +100,22 @@ def read_parquet(spark: SparkSession, path: str):
     once per read call — i.e. once per query per table at bench cadence,
     and by far the dominant cost of creating a DataFrame on a degraded
     host). Exactly inference-equivalent — no hardcoded schemas, the same
-    footer metadata read a different way: ``prefer_timestamp_ntz=True``
-    reproduces Spark's parquet mapping (isAdjustedToUTC=false -> NTZ);
-    tests/test_read_schema.py pins schema equality for every shipped table
-    at every SF tier. Directories still go through plain
-    ``spark.read.parquet`` (multi-file footer merge is Spark's job)."""
-    import os as _os
-
-    if _os.path.isdir(path):
+    footer metadata read a different way: ``prefer_timestamp_ntz`` follows
+    the session's ``spark.sql.parquet.inferTimestampNTZ.enabled``, as
+    Spark's own mapping does (isAdjustedToUTC=false -> NTZ only while it is
+    on); tests/test_read_schema.py pins schema equality for every shipped
+    table at every SF tier. Only local files (no ``scheme://`` prefix, or
+    ``file://``) take the footer path; remote URIs and directories go
+    through plain ``spark.read.parquet`` (Spark's filesystem layer resolves
+    the scheme, and multi-file footer merge is Spark's job)."""
+    local = path[len("file://") :] if path.startswith("file://") else path
+    if _URI_SCHEME.match(local) or os.path.isdir(local):
         return spark.read.parquet(path)
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    ntz = spark.conf.get(_INFER_NTZ_KEY, "true").lower() == "true"
+    schema = from_arrow_schema(pq.read_schema(local), prefer_timestamp_ntz=ntz)
     return spark.read.schema(schema).parquet(path)
 
 

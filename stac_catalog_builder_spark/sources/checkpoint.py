@@ -10,6 +10,7 @@ snapshot manifests + per-partition lineage the north rule requires):
     <root>/<stage>/_lineage/...parquet               one row per completed partition
     <root>/<stage>/_metrics/...parquet               per-partition row counts etc.
     <root>/<stage>/_snapshots.json                   append-only snapshot log
+    <root>/<stage>/_schema.json                      written schema + partition column
 
 Resume = left_anti join of the pending work's partition keys against
 ``_lineage`` (the reference's "skip if stored" check, terracatalog.py:366-375),
@@ -32,10 +33,13 @@ parquet footer metadata), never by re-running the upstream stage DAG — a
 naive ``df.count()``-style metrics pass would double the cost of every
 checkpointed write.
 
-Partition keys round-trip as **strings** (their Hive directory form): the
-store's own readbacks pass a schema with the key as a string, and the
-schema-less read disables partition-column type inference, so keys are
-stable and engine-independent ("007" stays "007", never 7).
+Partition keys round-trip as **strings** (their Hive directory form): every
+readback passes a schema with the key as a string, so keys are stable and
+engine-independent ("007" stays "007", never 7). ``write_stage`` records the
+stage's schema in ``<root>/<stage>/_schema.json`` before its data write (so
+a crash anywhere later still leaves the stage readable) and refuses a write
+whose schema differs from the recorded one; ``read_stage`` reads with it.
+Each snapshot line also records the schema its write used.
 """
 
 from __future__ import annotations
@@ -47,8 +51,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
 
 
 def _dynamic_overwrite(
@@ -72,28 +74,17 @@ def _dynamic_overwrite(
     )
 
 
-def _read_keyed(
-    spark: SparkSession, path: Path, schema: T.StructType | None = None
-) -> DataFrame:
+def _read_keyed(spark: SparkSession, path: Path, schema: T.StructType) -> DataFrame:
     """Read a part_key-partitioned table so the partition key always comes
     back as the string written in the dir name.
 
     ``schema``: the known readback schema (data columns in file order, the
-    partition column LAST as string — what inference would produce). The
-    store wrote every table it reads back, so the schema is available
+    partition column LAST as string — what inference-off reads produce).
+    The store wrote every table it reads back, so the schema is available
     without Spark's 1-task footer-inference job per read, and it fixes the
-    key's type without touching session conf. Callers that cannot know it
-    (external tables) pass None and pay inference, with partition-column
-    type inference switched off for the read.
+    key's type without touching session conf.
     tests/test_checkpoint.py pins known-schema == inferred-schema reads."""
-    if schema is not None:
-        return spark.read.schema(schema).parquet(str(path))
-    prev = spark.conf.get(_INFER_KEY, "true")
-    spark.conf.set(_INFER_KEY, "false")
-    try:
-        return spark.read.parquet(str(path))
-    finally:
-        spark.conf.set(_INFER_KEY, prev)
+    return spark.read.schema(schema).parquet(str(path))
 
 
 def _readback_schema(written: T.StructType, part_col: str) -> T.StructType:
@@ -155,6 +146,9 @@ class SnapshotStore:
     def _snapshots_path(self, stage: str) -> Path:
         return self._stage(stage) / "_snapshots.json"
 
+    def _schema_path(self, stage: str) -> Path:
+        return self._stage(stage) / "_schema.json"
+
     # -- lineage ------------------------------------------------------------
     def completed_partitions(self, spark: SparkSession, stage: str) -> DataFrame | None:
         p = self._lineage_path(stage)
@@ -186,9 +180,21 @@ class SnapshotStore:
         self, df: DataFrame, stage: str, part_col: str, snapshot_note: str = ""
     ) -> dict:
         """Write a stage partitioned by ``part_col`` with exactly-once
-        per-partition semantics (see module docstring for the protocol)."""
+        per-partition semantics (see module docstring for the protocol).
+        Raises ``ValueError`` before writing anything when the readback
+        schema differs from the stage's recorded one: old partitions would
+        no longer read back under one schema (write a new stage)."""
         spark = df.sparkSession
+        self._check_schema(spark, stage, df.schema, part_col)
         already = self._committed_keys(spark, stage)
+
+        # 0. schema record before any data lands (atomic replace; rewriting
+        #    it after a passed check changes nothing the readback sees)
+        rec = self._schema_path(stage)
+        rec.parent.mkdir(parents=True, exist_ok=True)
+        tmp = rec.with_name(rec.name + ".tmp")
+        tmp.write_text(json.dumps({"part_col": part_col, "schema": df.schema.jsonValue()}))
+        tmp.replace(rec)
 
         # 1. data: dynamic partition overwrite (idempotent on crash-retry)
         _dynamic_overwrite(df, self._data_path(stage), part_col)
@@ -255,14 +261,55 @@ class SnapshotStore:
             "note": snapshot_note,
             "partitions": sorted(new_keys),
             "refreshed": sorted(refreshed),
+            "schema": df.schema.jsonValue(),
         }
         with open(self._snapshots_path(stage), "a") as f:
             f.write(json.dumps(snap, default=str) + "\n")
         return snap
 
+    def _recorded_schema(self, spark: SparkSession, stage: str) -> T.StructType | None:
+        """Readback schema of the stage's data, or None if it has none. A
+        stage written before the store kept ``_schema.json`` falls back to
+        its data footers (one inference job), with the partition column
+        named by its directories and read back as a string."""
+        rec = self._schema_path(stage)
+        if rec.exists():
+            r = json.loads(rec.read_text())
+            return _readback_schema(T.StructType.fromJson(r["schema"]), r["part_col"])
+        data = self._data_path(stage)
+        if not _has_parquet(data):
+            return None
+        part_col = next(d.name.split("=", 1)[0] for d in data.iterdir() if "=" in d.name)
+        return _readback_schema(spark.read.parquet(str(data)).schema, part_col)
+
+    def _check_schema(
+        self, spark: SparkSession, stage: str, written: T.StructType, part_col: str
+    ) -> None:
+        recorded = self._recorded_schema(spark, stage)
+        if recorded is None:
+            return
+        old = {f.name: f.dataType.simpleString() for f in recorded.fields}
+        new = {
+            f.name: f.dataType.simpleString()
+            for f in _readback_schema(written, part_col).fields
+        }
+        diff = [
+            f"{name}: {old.get(name, '(absent)')} -> {new.get(name, '(absent)')}"
+            for name in sorted(old.keys() | new.keys())
+            if old.get(name) != new.get(name)
+        ]
+        if diff:
+            raise ValueError(
+                f"stage {stage!r} was written with a different schema; "
+                f"differing fields: {', '.join(diff)}"
+            )
+
     # -- read ---------------------------------------------------------------
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        return _read_keyed(spark, self._data_path(stage))
+        schema = self._recorded_schema(spark, stage)
+        if schema is None:
+            raise ValueError(f"stage {stage!r} has no data")
+        return _read_keyed(spark, self._data_path(stage), schema)
 
     def metrics(self, spark: SparkSession, stage: str) -> DataFrame:
         return _read_keyed(spark, self._metrics_path(stage), _METRICS_READBACK)

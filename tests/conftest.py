@@ -20,6 +20,18 @@ SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 
 
+def jobs_run_by(spark, group: str, fn):
+    """-> (``fn()``, ids of the Spark jobs it ran), tagged via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app="scb-spark-tests", master="local[4]", shuffle_partitions=8)

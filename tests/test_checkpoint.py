@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore, run_resumable
 
+INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
+
 
 @pytest.fixture()
 def store(tmp_path):
@@ -31,11 +33,9 @@ def test_write_then_read_stage(spark, store):
 
 
 def test_pending_anti_join(spark, store):
-    from stac_catalog_builder_spark.sources import checkpoint as cp
-
     overwrite_key = "spark.sql.sources.partitionOverwriteMode"
-    confs = {k: spark.conf.get(k) for k in (overwrite_key, cp._INFER_KEY)}
-    assert confs[cp._INFER_KEY] == "true"  # inference left on
+    confs = {k: spark.conf.get(k) for k in (overwrite_key, INFER_KEY)}
+    assert confs[INFER_KEY] == "true"  # inference left on
     # "007" is zero-padded: an inferred integer key would read back as 7
     df = spark.range(10).select(
         (F.col("id") % 2).cast("string").alias("part_key"), F.col("id").alias("v")
@@ -47,6 +47,9 @@ def test_pending_anti_join(spark, store):
     assert sorted(r.part_key for r in pending) == ["2", "3", "7"]
     m = {r.part_key: r.n_rows for r in store.metrics(spark, "s2").collect()}
     assert m == {"0": 5, "1": 5, "007": 1}
+    back = store.read_stage(spark, "s2").where(F.col("v") == 99).collect()
+    assert [r.part_key for r in back] == ["007"]
+    assert {k: spark.conf.get(k) for k in confs} == confs
 
 
 def test_run_resumable_computes_only_missing(spark, store):
@@ -110,6 +113,50 @@ def test_crash_retry_is_exactly_once(spark, store):
     assert m == {"1": 10}  # metrics committed exactly once too
 
 
+def test_crash_before_snapshot_append_still_resumes(spark, store):
+    """A crash after the lineage commit but before the snapshot line is
+    appended leaves nothing pending; the rerun must still read the stage."""
+    calls = []
+
+    def compute(keys_df):
+        calls.append(sorted(r.part_key for r in keys_df.collect()))
+        return spark.createDataFrame([("007", 1), ("1", 2)], "part_key string, v int")
+
+    work = _work(spark, ["007", "1"])
+    run_resumable(store, spark, "s11", work, "part_key", compute)
+    store._snapshots_path("s11").unlink()  # the lost append
+
+    out = run_resumable(store, spark, "s11", work, "part_key", compute)
+    assert len(calls) == 1
+    assert sorted((r.part_key, r.v) for r in out.collect()) == [("007", 1), ("1", 2)]
+
+
+def test_stage_without_schema_record_reads_from_footers(spark, store):
+    """A stage whose schema was never recorded (written by an older store)
+    reads back from its data footers, keys as strings, and still guards
+    re-writes against schema changes."""
+    import json
+
+    df = spark.createDataFrame([("007", 1)], "part_key string, v bigint")
+    store.write_stage(df, "s12", "part_key")
+    store._schema_path("s12").unlink()
+    snaps = store._snapshots_path("s12")
+    old_lines = [{k: v for k, v in s.items() if k != "schema"} for s in store.snapshots("s12")]
+    snaps.write_text("".join(json.dumps(s) + "\n" for s in old_lines))
+
+    assert [tuple(r) for r in store.read_stage(spark, "s12").collect()] == [(1, "007")]
+    with pytest.raises(ValueError, match=r"'s12'.*v: bigint -> string"):
+        store.write_stage(
+            spark.createDataFrame([("2", "x")], "part_key string, v string"), "s12", "part_key"
+        )
+    store.write_stage(
+        spark.createDataFrame([("2", 2)], "part_key string, v bigint"), "s12", "part_key"
+    )
+    assert sorted(r.part_key for r in store.read_stage(spark, "s12").collect()) == ["007", "2"]
+    with pytest.raises(ValueError, match="'nope' has no data"):
+        store.read_stage(spark, "nope")
+
+
 def test_read_stage_as_of_partition_sets(spark, store):
     """Snapshot N restricts the read to partitions committed by snapshots
     0..N (partition-set time travel for resumable pipelines)."""
@@ -159,6 +206,27 @@ def test_snapshot_log_appends(spark, store):
     assert [s["note"] for s in snaps] == ["first", "second"]
 
 
+def test_snapshot_records_schema_and_refuses_evolved_rewrite(spark, store):
+    """Each snapshot line records the written schema; a re-write with the
+    same schema commits, an evolved one raises before writing anything."""
+    df = spark.createDataFrame([("a", 1)], "part_key string, v bigint")
+    store.write_stage(df, "s10", "part_key")
+    store.write_stage(
+        spark.createDataFrame([("b", 2)], "part_key string, v bigint"), "s10", "part_key"
+    )
+    snaps = store.snapshots("s10")
+    assert [s["schema"] for s in snaps] == [df.schema.jsonValue()] * 2
+    assert store.read_stage(spark, "s10").count() == 2
+
+    evolved = spark.createDataFrame(
+        [("c", "3", 1.0)], "part_key string, v string, w double"
+    )
+    with pytest.raises(ValueError, match=r"'s10'.*v: bigint -> string.*w: \(absent\) -> double"):
+        store.write_stage(evolved, "s10", "part_key")
+    assert len(store.snapshots("s10")) == 2
+    assert sorted(r.part_key for r in store.read_stage(spark, "s10").collect()) == ["a", "b"]
+
+
 def test_rewriting_committed_partition_refreshes_metrics(spark, store):
     """ADVICE r2: an intentional rewrite of a committed partition (outside
     the pending() flow) must refresh _metrics.n_rows and be visible in the
@@ -194,14 +262,14 @@ def test_known_readback_schemas_match_inference(spark, store):
     )
     store.write_stage(df, "schem", "part_key")
 
-    prev = spark.conf.get(cp._INFER_KEY, "true")
-    spark.conf.set(cp._INFER_KEY, "false")
+    prev = spark.conf.get(INFER_KEY, "true")
+    spark.conf.set(INFER_KEY, "false")
     try:
         inferred_lineage = spark.read.parquet(str(store._lineage_path("schem"))).schema
         inferred_metrics = spark.read.parquet(str(store._metrics_path("schem"))).schema
         inferred_data = spark.read.parquet(str(store._data_path("schem"))).schema
     finally:
-        spark.conf.set(cp._INFER_KEY, prev)
+        spark.conf.set(INFER_KEY, prev)
 
     assert cp._LINEAGE_READBACK == inferred_lineage
     assert cp._METRICS_READBACK == inferred_metrics

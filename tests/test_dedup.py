@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import jobs_run_by
 from pyspark.sql import functions as F
 
 from stac_catalog_builder_spark.functions.hashes import (
@@ -217,7 +218,7 @@ def test_salt_metrics_observable(spark):
     rows = [(i, 777) for i in range(30)] + [(100 + i, 1000 + i) for i in range(10)]
     bucketed = spark.createDataFrame(rows, "doc_id bigint, bucket bigint")
     salted = dedup._salt_hot_buckets(bucketed, "doc_id", max_bucket=8, tag="t")
-    m = dedup.SALT_METRICS["t"]
+    m = dedup.SALT_METRICS["t"].first().asDict()
     assert m == {"oversized_buckets": 1, "rows_in_oversized": 30, "max_bucket": 8}
     # hot bucket split into ceil(30/8)=4 sub-buckets; singletons keep salt 0
     sub = salted.where(F.col("bucket") == 777).select("salt").distinct().count()
@@ -228,7 +229,7 @@ def test_salt_metrics_observable(spark):
 
     # generous max_bucket: no salting -> candidate set exact
     dedup._salt_hot_buckets(bucketed, "doc_id", max_bucket=1000, tag="t")
-    m2 = dedup.SALT_METRICS["t"]
+    m2 = dedup.SALT_METRICS["t"].first().asDict()
     assert m2["oversized_buckets"] == 0 and m2["rows_in_oversized"] == 0
 
     # operator-level: the metric is always published under the operator tag
@@ -241,14 +242,35 @@ def test_salt_metrics_observable(spark):
     cache.release()
 
 
+def test_lsh_operators_run_no_job_at_call_time(spark):
+    """Calling an LSH operator only builds its plan: the hot-bucket salting
+    carries no eager probe, so no Spark job runs until the caller acts."""
+    from stac_catalog_builder_spark import cache, synth
+    from stac_catalog_builder_spark.session import read_parquet
+
+    docs = read_parquet(spark, f"{SF}/documents.parquet").select("doc_id", "text")
+    images = synth.images(spark, SF)
+    emb = read_parquet(spark, f"{SF}/embeddings.parquet")
+    calls = {
+        "minhash": lambda: dedup.minhash_candidate_pairs(docs),
+        "simhash": lambda: dedup.simhash_candidate_pairs(docs),
+        "phash": lambda: dedup.phash_neardup_pairs(images),
+        "embedding": lambda: dedup.embedding_neardup_pairs(emb),
+    }
+    jobs = {name: jobs_run_by(spark, f"lazy-{name}", call)[1] for name, call in calls.items()}
+    assert all(not ids for ids in jobs.values()), jobs
+    cache.release()
+
+
 def test_hamming_candidate_pairs_exact_vs_bruteforce(spark):
     """The generic Hamming-ball self-join must return EXACTLY the brute-force
     pair set (pigeonhole is a guarantee, not a heuristic) while no bucket is
     oversized — verified on random 64-bit sketches plus planted near-dups,
     at two different max_hamming block layouts: h=3 (single-block keys, 4
-    blocks) and h=6 (auto combo_blocks=2 -> C(8,2)=28 paired-block keys,
-    the high-entropy layout round-5 growth measurement motivated), plus the
-    h=6 single-block layout forced explicitly (7 blocks, 64 not divisible)."""
+    blocks) and h=6 (pairs of blocks -> C(8,2)=28 paired-block keys, the
+    high-entropy layout round-5 growth measurement motivated), plus h=3 over
+    sketches masked to sketch_bits=62 (4 blocks of uneven width 15/16/15/16
+    bits)."""
     import itertools
     import random
 
@@ -263,25 +285,28 @@ def test_hamming_candidate_pairs_exact_vs_bruteforce(spark):
         if flipped >= 1 << 63:
             flipped -= 1 << 64
         rows.append((1000 + j, flipped))
-    df = spark.createDataFrame(rows, "doc_id bigint, sketch bigint")
 
-    def brute(h):
+    def brute(rows, h):
         out = set()
         for (ia, sa), (ib, sb) in itertools.combinations(rows, 2):
             if bin((sa ^ sb) & ((1 << 64) - 1)).count("1") <= h:
                 out.add((min(ia, ib), max(ia, ib)))
         return out
 
-    for h, combo in ((3, None), (6, None), (6, 1)):
+    for h, bits in ((3, 64), (6, 64), (3, 62)):
+        # sketch_bits contract: bits at and above `bits` are zero
+        mask = (1 << bits) - 1 if bits < 64 else -1
+        masked = [(i, s & mask) for i, s in rows]
+        df = spark.createDataFrame(masked, "doc_id bigint, sketch bigint")
+        tag = f"t{h}_{bits}"
         got = {
             (r.id_a, r.id_b)
             for r in dedup.hamming_candidate_pairs(
-                df, "doc_id", "sketch", max_hamming=h, tag=f"t{h}",
-                combo_blocks=combo,
+                df, "doc_id", "sketch", max_hamming=h, tag=tag, sketch_bits=bits
             ).collect()
         }
-        assert got == brute(h), f"max_hamming={h} combo={combo}"
-        assert dedup.SALT_METRICS[f"t{h}"]["oversized_buckets"] == 0
+        assert got == brute(masked, h), f"max_hamming={h} sketch_bits={bits}"
+        assert dedup.SALT_METRICS[tag].first().asDict()["oversized_buckets"] == 0
     from stac_catalog_builder_spark import cache
 
     cache.release()

@@ -425,7 +425,7 @@ SELECT id_a, id_b FROM star
     out = e.q_minhash_pairs(spark, SF)
     _assert_parity(out, con, sql)
     # the exactness precondition: no bucket was salted on this corpus
-    assert SALT_METRICS["minhash_pairs"]["oversized_buckets"] == 0
+    assert SALT_METRICS["minhash_pairs"].first().asDict()["oversized_buckets"] == 0
     # star pairs alone would be exactly one per doc; LSH must add more
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert out.count() > n_docs
@@ -490,7 +490,7 @@ FROM corpus cp LEFT JOIN all_lab al ON al.node = cp.doc_id
 """
     out = e.q_dedup_groups(spark, SF)
     _assert_parity(out, con, sql)
-    assert SALT_METRICS["minhash_pairs"]["oversized_buckets"] == 0
+    assert SALT_METRICS["minhash_pairs"].first().asDict()["oversized_buckets"] == 0
     # the doubled corpus guarantees real near-dup groups: every original
     # doc must share its group with its +1e6 twin and not be kept twice
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
@@ -582,7 +582,7 @@ SELECT id_a, id_b, CAST(0 AS INT) FROM star
 """
     out = e.q_simhash_pairs(spark, SF)
     _assert_parity(out, con, sql)
-    assert SALT_METRICS["simhash_pairs"]["oversized_buckets"] == 0
+    assert SALT_METRICS["simhash_pairs"].first().asDict()["oversized_buckets"] == 0
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert out.count() > n_docs
 

@@ -14,7 +14,7 @@ from glob import glob
 from pathlib import Path
 
 import pytest
-from conftest import SF0001
+from conftest import SF0001, jobs_run_by
 
 from stac_catalog_builder_spark.session import read_parquet
 
@@ -39,3 +39,29 @@ def test_read_parquet_rows_match_inference(spark):
     a = spark.read.parquet(path).collect()
     b = read_parquet(spark, path).collect()
     assert a == b
+
+
+def test_read_parquet_follows_infer_timestamp_ntz_conf(spark):
+    # with NTZ inference off, Spark reads isAdjustedToUTC=false timestamps
+    # (orders.o_orderdate) as TIMESTAMP; the footer path must agree
+    path = f"{SF0001}/orders.parquet"
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        inferred = spark.read.parquet(path).schema
+        got = read_parquet(spark, path).schema
+    finally:
+        spark.conf.set(key, prev)
+    assert got == inferred, (got, inferred)
+    assert dict((f.name, f.dataType.typeName()) for f in got)["o_orderdate"] == "timestamp"
+
+
+def test_read_parquet_local_file_uri_takes_footer_path(spark):
+    # a file:// URI is local: no inference job, same schema as inference
+    path = f"{SF0001}/orders.parquet"
+    got, jobs = jobs_run_by(
+        spark, "file-uri-read", lambda: read_parquet(spark, f"file://{path}").schema
+    )
+    assert jobs == []
+    assert got == spark.read.parquet(path).schema
