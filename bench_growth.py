@@ -850,7 +850,7 @@ efficiency is scale-invariant while the single hash-shuffle grows linearly.
 ## 8. incremental extent maintenance vs full-history recompute (round 5)
 
 The living-catalog claim behind `grouping.incremental_extents` and
-`streaming/extents.run_extent_maintenance`: every extent statistic is
+`streaming/extents.run_increment_maintenance`: every extent statistic is
 algebraic, so a new epoch folds into the live summary by reading ONE batch
 plus a dimension-sized summary — the reference's shape (rebuild every
 collection from all of its items per update, builder.py:484-510) instead
@@ -887,7 +887,7 @@ relative error holding within the 1.6% design band at both sizes. The
 shuffled sketch state is constant (<= m rows per group per partition), so
 at 10^12 rows the sketch's exchange stays dimension-sized while the exact
 twin's grows with the key space — and the register table is the mergeable
-state the streaming maintenance path (`run_hll_maintenance`) commits per
+state the streaming maintenance path (`run_increment_maintenance`) commits per
 epoch.
 
 ## 10. footprint_iou_pairs growth (pairwise overlap join, round 5)

@@ -272,13 +272,3 @@ def decode_rvid_header(payload: bytes) -> tuple[int, int, int, int]:
     if payload[:4] != RVID_MAGIC:
         raise ValueError("not an RVID payload")
     return struct.unpack("<IHHH", payload[4:14])
-
-
-def decode_rvid_frame(payload: bytes, idx: int) -> np.ndarray:
-    """Random-access decode of ONE frame (frame sampling never materializes
-    the whole clip)."""
-    n, w, h, _ = decode_rvid_header(payload)
-    if not 0 <= idx < n:
-        raise IndexError(f"frame {idx} out of range 0..{n - 1}")
-    off = 14 + idx * w * h
-    return np.frombuffer(payload[off : off + w * h], dtype=np.uint8).reshape(h, w)

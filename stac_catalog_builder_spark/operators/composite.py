@@ -78,7 +78,7 @@ def composite_state(
     count. State rows merge by addition (``composite_merge``) and render
     to the delivery raster with ``composite_render`` — splitting the
     pipeline at the algebraic state is what makes mosaics incrementally
-    maintainable (streaming/extents.run_composite_maintenance). Input
+    maintainable (streaming/extents.run_increment_maintenance). Input
     needs image_id, bytes, fmt + the footprint bbox.
     """
     if tile_cells < 1:

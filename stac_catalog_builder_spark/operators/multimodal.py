@@ -389,7 +389,6 @@ def cross_modal_topk(images: DataFrame, k: int = 3, dim: int = 16) -> DataFrame:
 
 from ..functions.codecs import (  # noqa: E402  (grouped with their operators)
     WAV_RATE,
-    decode_rvid_frame,
     decode_rvid_header,
     decode_wav,
     encode_rvid,

@@ -3,8 +3,10 @@
 The reference is batch-only; its streaming-shaped mechanics are time-slot
 partitioned ingestion + resumable slices (stacbuilder/terracatalog.py:432-551).
 This module is the real streaming form: file-source -> watermark -> tumbling
-window -> sink, plus a foreachBatch exactly-once sink into the SnapshotStore
-(streaming checkpoint == the reference's slice/resume semantics).
+window -> sink. It holds the one file-stream reader and the one memory-sink
+runner; the one exactly-once foreachBatch sink into the SnapshotStore is
+streaming/extents.run_increment_maintenance (streaming checkpoint == the
+reference's slice/resume semantics).
 """
 
 from __future__ import annotations
@@ -25,13 +27,34 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def read_event_stream(spark: SparkSession, path: str, max_files: int = 1) -> DataFrame:
-    """File-source event stream (one parquet dir; in production: Kafka)."""
+def read_file_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """The one file-source stream: a directory of parquet files, one file
+    per micro-batch so every file is its own epoch (in production: Kafka)."""
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
+
+
+def run_to_memory(
+    spark: SparkSession, df: DataFrame, query_name: str, output_mode: str = "append"
+) -> DataFrame:
+    """The one memory-sink runner: start, drain, stop, return the table —
+    the pattern for deterministic streaming tests. The query runs on
+    Spark's temporary checkpoint, so the same ``query_name`` can be run
+    again."""
+    q = (
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def windowed_rollup(
@@ -55,23 +78,6 @@ def windowed_rollup(
             "sum_value_x1000",
         )
     )
-
-
-def _run_to_memory_sink(
-    spark: SparkSession, df: DataFrame, query_name: str, output_mode: str = "append"
-) -> DataFrame:
-    """Shared memory-sink harness: start, drain, stop, return the table."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def session_rollup(
@@ -98,16 +104,6 @@ def session_rollup(
             "sum_value_x1000",
         )
     )
-
-
-def run_sessions_to_memory(
-    spark: SparkSession, src_path: str, query_name: str = "events_sessions"
-) -> DataFrame:
-    """Drive the session-window stream to completion (append mode — only
-    watermark-finalized sessions emit; the caller appends a far-future
-    sentinel file so every real session finalizes deterministically)."""
-    agg = session_rollup(read_event_stream(spark, src_path))
-    return _run_to_memory_sink(spark, agg, query_name)
 
 
 def interval_join(purchases: DataFrame, signups: DataFrame) -> DataFrame:
@@ -143,18 +139,6 @@ def interval_join(purchases: DataFrame, signups: DataFrame) -> DataFrame:
     )
 
 
-def run_interval_join_to_memory(
-    spark: SparkSession, src_path: str, query_name: str = "events_ssjoin"
-) -> DataFrame:
-    ev1 = read_event_stream(spark, src_path)
-    ev2 = read_event_stream(spark, src_path)
-    out = interval_join(
-        ev1.where(F.col("event_type") == "purchase"),
-        ev2.where(F.col("event_type") == "signup"),
-    )
-    return _run_to_memory_sink(spark, out, query_name)
-
-
 def dedup_within_watermark(
     events: DataFrame, keys: list[str], watermark: str = "2 hours"
 ) -> DataFrame:
@@ -163,53 +147,3 @@ def dedup_within_watermark(
     complement of streaming/stateful.py's custom applyInPandasWithState
     dedup (which keeps its seen-set forever)."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def run_dedup_to_memory(
-    spark: SparkSession, src_path: str, keys: list[str],
-    query_name: str = "events_dedup",
-) -> DataFrame:
-    agg = dedup_within_watermark(read_event_stream(spark, src_path), keys)
-    return _run_to_memory_sink(spark, agg, query_name)
-
-
-def run_to_memory(
-    spark: SparkSession, src_path: str, query_name: str = "events_rollup"
-) -> DataFrame:
-    """Drive the stream to completion synchronously (memory sink) — the
-    pattern for deterministic streaming tests; returns the result table."""
-    agg = windowed_rollup(read_event_stream(spark, src_path))
-    return _run_to_memory_sink(spark, agg, query_name, output_mode="complete")
-
-
-def run_foreach_batch_to_store(
-    spark: SparkSession, src_path: str, store, stage: str = "stream_rollup"
-) -> None:
-    """Exactly-once sink: each micro-batch lands in the SnapshotStore with
-    lineage rows. foreachBatch retries an epoch on failure — two guards make
-    the sink exactly-once anyway: (1) epochs already committed to lineage are
-    skipped up front; (2) the store's dynamic-partition-overwrite commit makes
-    a replay of a half-written epoch replace, not append."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        done = store.completed_partitions(spark, stage)
-        if done is not None and (
-            done.where(F.col("part_key") == F.lit(str(int(epoch_id)))).limit(1).count()
-            > 0
-        ):
-            return  # epoch replayed after a successful commit: no-op
-        store.write_stage(
-            batch_df.withColumn("part_key", F.lit(int(epoch_id))),
-            stage,
-            "part_key",
-            snapshot_note=f"epoch={epoch_id}",
-        )
-
-    agg = windowed_rollup(read_event_stream(spark, src_path))
-    q = agg.writeStream.outputMode("update").foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

@@ -1,21 +1,34 @@
-"""Streaming catalog-extent maintenance.
+"""Streaming catalog-extent maintenance: the one exactly-once epoch sink.
 
 The reference rebuilds every collection's extent from all of its items on
 each update (stacbuilder/builder.py:484-510 — a full-history pass per run).
 The streaming form here is the shape a living 100 TB catalog needs: newly
 assigned assets arrive as a file stream (Kafka in production), each
-micro-batch is reduced to a PER-KEY EXTENT INCREMENT (one dimension-sized
-aggregate — the batch itself is never stored), and increments land in the
-SnapshotStore as per-epoch partitions. Because every extent statistic is
-algebraic (sum/min/max — operators/grouping), the CURRENT catalog extents
-are an exact merge of all committed increments, bit-equal to a from-scratch
-recompute over the full history at any point in time.
+micro-batch is reduced to a PER-KEY INCREMENT (one dimension-sized
+aggregate — the raw batch is never stored), and increments land in the
+SnapshotStore as per-epoch partitions. Any state whose read-side merge is
+algebraic over increments is maintained this way, by passing its register
+function as ``increment_fn`` and merging ``store.read_stage(...)`` with its
+merge:
 
-Exactly-once falls out of the same two guards as the event sink
-(streaming/events.run_foreach_batch_to_store): epochs already committed to
-lineage are skipped up front, and the store's dynamic-partition-overwrite
-commit makes a replayed half-written epoch replace rather than append —
-a replay can never double-count an increment.
+- extents: ``grouping.collection_extents`` / ``merge_extent_summaries``
+  (sum/min/max);
+- HLL registers: ``sketches.hll_registers`` / ``hll_merge`` (max —
+  idempotent, so even a double-landed increment could not skew it);
+- CMS, histogram, moment and fixity registers: ``sketches.*_registers`` /
+  ``*_merge`` (sum or xor — not idempotent, so they lean on the guards
+  below);
+- mosaics: ``composite.composite_state`` / ``composite_merge`` (canvas
+  addition).
+
+The CURRENT state is then an exact merge of all committed increments,
+bit-equal to a from-scratch recompute over the full history at any point
+in time.
+
+Exactly-once comes from two guards: epochs already committed to lineage
+are skipped up front, and the store's dynamic-partition-overwrite commit
+makes a replayed half-written epoch replace rather than append — a replay
+can never double-count an increment.
 """
 
 from __future__ import annotations
@@ -23,24 +36,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.grouping import collection_extents, merge_extent_summaries
-
 
 def run_increment_maintenance(
     spark: SparkSession,
-    src_path: str,
+    stream: DataFrame,
     store,
-    increment_fn,
     stage: str,
-    max_files: int = 1,
+    increment_fn,
 ) -> None:
-    """Generic exactly-once streaming maintenance: reduce each micro-batch to
-    a DIMENSION-SIZED increment (``increment_fn(batch_df) -> DataFrame``) and
-    commit it to the SnapshotStore under its epoch. Works for any state whose
-    read-side merge is algebraic over increments (extents: sum/min/max; HLL
-    registers: max). The stream schema is inferred from the staged parquet
-    (production passes an explicit schema/Kafka source)."""
-    schema = spark.read.parquet(src_path).schema
+    """Drive ``stream`` to completion, committing ``increment_fn(batch_df)``
+    of each micro-batch to the SnapshotStore under its epoch: a
+    dimension-sized increment of a stateless stream, or the batch itself
+    (identity) for the updated rows of a streaming aggregate. Update output
+    mode is append for a stream without aggregation, and emits a streaming
+    aggregate's rows as they change."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -60,300 +69,8 @@ def run_increment_maintenance(
             snapshot_note=f"epoch={epoch_id}",
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(src_path)
-    )
-    q = stream.writeStream.outputMode("append").foreachBatch(sink).start()
+    q = stream.writeStream.outputMode("update").foreachBatch(sink).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-
-
-def run_extent_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    keys: list[str],
-    stage: str = "extent_increments",
-    max_files: int = 1,
-) -> None:
-    """Drive the assigned-asset stream to completion, committing one extent
-    increment per micro-batch epoch."""
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: collection_extents(batch, list(keys)),
-        stage,
-        max_files,
-    )
-
-
-def current_extents(
-    spark: SparkSession, store, keys: list[str], stage: str = "extent_increments"
-) -> DataFrame:
-    """The catalog's live per-key extents: one exact algebraic merge over
-    all committed increments (dimension-sized — keys x epochs rows — so
-    this is a cheap read-side aggregate, never a history rescan)."""
-    incs = store.read_stage(spark, stage).drop("part_key")
-    return merge_extent_summaries(list(keys), incs)
-
-
-def run_hll_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    group_cols: list[str],
-    key_col: str,
-    stage: str = "hll_increments",
-    max_files: int = 1,
-) -> None:
-    """Streaming cardinality maintenance: each micro-batch reduces to its HLL
-    register table (at most m rows per group — operators/sketches) committed
-    under its epoch. max() is idempotent as well as associative/commutative,
-    so beyond never double-COUNTING, a replayed increment cannot even skew
-    the merge if it somehow landed twice — strictly stronger replay-safety
-    than the sum-bearing extent increments."""
-    from ..operators.sketches import hll_registers
-
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: hll_registers(batch, list(group_cols), key_col),
-        stage,
-        max_files,
-    )
-
-
-def current_hll(
-    spark: SparkSession,
-    store,
-    group_cols: list[str],
-    stage: str = "hll_increments",
-) -> DataFrame:
-    """Live cardinality estimates: register-wise max over all committed
-    epoch increments, then the standard estimate — bit-equal to sketching
-    the full history from scratch (tests/test_streaming.py asserts it)."""
-    from ..operators.sketches import hll_estimate, hll_merge
-
-    regs = store.read_stage(spark, stage).drop("part_key")
-    return hll_estimate(hll_merge(regs, list(group_cols)), list(group_cols))
-
-
-def run_cms_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    group_cols: list[str],
-    key_col: str,
-    stage: str = "cms_increments",
-    max_files: int = 1,
-) -> None:
-    """Streaming frequency maintenance: each micro-batch reduces to its CMS
-    register table (at most d*w rows per group — operators/sketches)
-    committed under its epoch. Unlike the HLL's idempotent max, the CMS
-    merge is a SUM — a double-landed increment would double-count, so this
-    sketch leans on both exactly-once guards (epoch lineage skip + dynamic
-    partition overwrite) rather than algebraic forgiveness; the replay
-    no-op test covers exactly that."""
-    from ..operators.sketches import cms_registers
-
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: cms_registers(batch, list(group_cols), key_col),
-        stage,
-        max_files,
-    )
-
-
-def current_cms(
-    spark: SparkSession,
-    store,
-    group_cols: list[str],
-    stage: str = "cms_increments",
-) -> DataFrame:
-    """Live CMS register state: cell-wise sum over all committed epoch
-    increments — equal to sketching the full history from scratch."""
-    from ..operators.sketches import cms_merge
-
-    regs = store.read_stage(spark, stage).drop("part_key")
-    return cms_merge(regs, list(group_cols))
-
-
-def run_hist_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    group_cols: list[str],
-    val_col: str,
-    lo: int,
-    hi: int,
-    n_bins: int,
-    stage: str = "hist_increments",
-    max_files: int = 1,
-) -> None:
-    """Streaming distribution maintenance: each micro-batch reduces to its
-    histogram register table (at most n_bins rows per group) committed
-    under its epoch — sum-merged like the CMS, so it rides the same
-    exactly-once guards. Quantile queries over the live state are
-    read-side (streaming/extents.current_hist + hist_quantiles)."""
-    from ..operators.sketches import hist_registers
-
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: hist_registers(
-            batch, list(group_cols), val_col, lo, hi, n_bins
-        ),
-        stage,
-        max_files,
-    )
-
-
-def current_hist(
-    spark: SparkSession,
-    store,
-    group_cols: list[str],
-    stage: str = "hist_increments",
-) -> DataFrame:
-    """Live histogram register state: bin-wise sum over all committed epoch
-    increments — equal to the histogram of the full history."""
-    from ..operators.sketches import hist_merge
-
-    regs = store.read_stage(spark, stage).drop("part_key")
-    return hist_merge(regs, list(group_cols))
-
-
-def run_moment_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    group_cols: list[str],
-    val_col: str,
-    stage: str = "moment_increments",
-    max_files: int = 1,
-) -> None:
-    """Streaming normalization-statistics maintenance: each micro-batch
-    reduces to its moment state (5 numbers per group —
-    operators/sketches.moment_registers) committed under its epoch. Like
-    the CMS (and unlike the HLL max), the merge SUMS, so exactly-once
-    delivery is load-bearing — both store guards are exercised."""
-    from ..operators.sketches import moment_registers
-
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: moment_registers(batch, list(group_cols), val_col),
-        stage=stage,
-        max_files=max_files,
-    )
-
-
-def current_moments(
-    spark: SparkSession,
-    store,
-    group_cols: list[str],
-    stage: str = "moment_increments",
-) -> DataFrame:
-    """Live mean/variance: component-wise merge over all committed epoch
-    increments, then the exact fixed-point stats — bit-equal to computing
-    the state from the full history (tests/test_streaming.py asserts it)."""
-    from ..operators.sketches import moment_stats
-
-    regs = store.read_stage(spark, stage).drop("part_key")
-    return moment_stats(regs, list(group_cols))
-
-
-def run_fixity_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    group_cols: list[str],
-    content_cols: list[str],
-    stage: str = "fixity_increments",
-    max_files: int = 1,
-) -> None:
-    """Streaming integrity maintenance: each micro-batch reduces to its
-    fixity register table (3 numbers per group — operators/sketches)
-    committed under its epoch, so the catalog's content digest stays live
-    as ingest appends. The sum lane merges by modular ADDITION and the xor
-    lane by xor — neither is idempotent (a double-landed epoch would skew
-    both), so like the CMS this leans on the exactly-once guards (epoch
-    lineage skip + dynamic partition overwrite); the replay no-op test
-    covers exactly that."""
-    from ..operators.sketches import fixity_registers
-
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: fixity_registers(batch, list(group_cols), list(content_cols)),
-        stage,
-        max_files,
-    )
-
-
-def current_fixity(
-    spark: SparkSession,
-    store,
-    group_cols: list[str],
-    stage: str = "fixity_increments",
-) -> DataFrame:
-    """Live fixity digests: lane-wise merge over all committed epoch
-    increments — equal to digesting the full history from scratch."""
-    from ..operators.sketches import fixity_merge
-
-    regs = store.read_stage(spark, stage).drop("part_key")
-    return fixity_merge(regs, list(group_cols))
-
-
-def run_composite_maintenance(
-    spark: SparkSession,
-    src_path: str,
-    store,
-    tile_cells: int = 64,
-    stage: str = "composite_increments",
-    max_files: int = 1,
-) -> None:
-    """Streaming mosaic maintenance: each micro-batch of scenes reduces to
-    its per-tile composite STATE (int64 sum + int32 count canvases —
-    operators/composite.composite_state) committed under its epoch, so the
-    living mosaic folds new acquisitions in without re-reading history.
-    Canvas merge is ADDITION (not idempotent), so like the CMS/fixity this
-    leans on the exactly-once store guards; the replay no-op test covers
-    the double-landing scenario."""
-    from ..operators.composite import composite_state
-
-    run_increment_maintenance(
-        spark,
-        src_path,
-        store,
-        lambda batch: composite_state(batch, tile_cells),
-        stage,
-        max_files,
-    )
-
-
-def current_composite(
-    spark: SparkSession,
-    store,
-    tile_cells: int = 64,
-    stage: str = "composite_increments",
-) -> DataFrame:
-    """The live mosaic: merge all committed epoch states and render —
-    byte-equal to compositing the full scene history from scratch
-    (tests/test_streaming.py asserts it)."""
-    from ..operators.composite import composite_merge, composite_render
-
-    states = store.read_stage(spark, stage).drop("part_key")
-    return composite_render(
-        composite_merge(states, tile_cells), tile_cells
-    )

@@ -60,26 +60,3 @@ def streaming_dedup(docs: DataFrame, shards: int = 16) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def run_streaming_dedup_to_memory(
-    spark, src_path: str, schema, query_name: str = "dedup_out"
-) -> DataFrame:
-    """Drive the stateful dedup over a file stream to completion (one file
-    per micro-batch -> duplicates across batches exercise the state)."""
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_path)
-    )
-    out = streaming_dedup(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", f"/tmp/scb_stream_ckpt_{query_name}")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -9,7 +9,8 @@ import shutil
 import pytest
 from pyspark.sql import types as T
 
-from stac_catalog_builder_spark.streaming.stateful import run_streaming_dedup_to_memory
+from stac_catalog_builder_spark.streaming.events import read_file_stream, run_to_memory
+from stac_catalog_builder_spark.streaming.stateful import streaming_dedup
 
 SF = "/root/testdata/sf0.001"
 
@@ -38,14 +39,28 @@ def dup_stream_dir(spark, tmp_path):
     return str(flat)
 
 
+def _run_dedup(spark, src, query_name):
+    return run_to_memory(
+        spark, streaming_dedup(read_file_stream(spark, src, DOCS_SCHEMA)), query_name
+    )
+
+
 def test_streaming_dedup_drops_cross_batch_duplicates(spark, dup_stream_dir, tmp_path):
     import uuid
 
-    out = run_streaming_dedup_to_memory(
-        spark, dup_stream_dir, DOCS_SCHEMA, query_name=f"d{uuid.uuid4().hex[:8]}"
-    )
+    out = _run_dedup(spark, dup_stream_dir, f"d{uuid.uuid4().hex[:8]}")
     rows = out.collect()
     hashes = [r.content_hash for r in rows]
     assert len(hashes) == len(set(hashes))  # every hash emitted exactly once
     assert len(rows) == 100  # 200 inputs, 100 distinct texts
     assert all(r.doc_id < 1000000 for r in rows)  # first occurrence wins
+
+
+def test_streaming_dedup_reruns_under_same_query_name(spark, dup_stream_dir):
+    """A second run under the same query name starts from fresh state: the
+    memory sink keeps no checkpoint of its own between runs, so the rerun
+    neither fails to recover nor sees the first run's seen-set."""
+    for _ in range(2):
+        rows = _run_dedup(spark, dup_stream_dir, "dedup_rerun").collect()
+        assert len(rows) == 100
+        assert len({r.content_hash for r in rows}) == 100

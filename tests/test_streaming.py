@@ -10,6 +10,7 @@ import pytest
 from stac_catalog_builder_spark.plans.relational import events_hourly
 from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
 from stac_catalog_builder_spark.streaming import events as streaming_events
+from stac_catalog_builder_spark.streaming import extents as sx
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,8 +24,33 @@ def events_dir(tmp_path):
     return str(d)
 
 
+def _events(spark, src):
+    return streaming_events.read_file_stream(spark, src, streaming_events.EVENTS_SCHEMA)
+
+
+def _maintain(spark, src, schema, store, stage, increment_fn):
+    """One exactly-once maintenance run over the staged file stream."""
+    sx.run_increment_maintenance(
+        spark,
+        streaming_events.read_file_stream(spark, src, schema),
+        store,
+        stage,
+        increment_fn,
+    )
+
+
+def _increments(spark, store, stage):
+    """Every committed epoch increment of ``stage``, epoch column dropped."""
+    return store.read_stage(spark, stage).drop("part_key")
+
+
 def test_streaming_rollup_matches_batch(spark, events_dir):
-    stream_out = streaming_events.run_to_memory(spark, events_dir, "t_rollup")
+    stream_out = streaming_events.run_to_memory(
+        spark,
+        streaming_events.windowed_rollup(_events(spark, events_dir)),
+        "t_rollup",
+        "complete",
+    )
     got = {
         (r.hour_epoch, r.event_type): (r.n_events, r.sum_value_x1000)
         for r in stream_out.collect()
@@ -62,7 +88,11 @@ def test_streaming_session_windows_match_batch(spark, tmp_path):
     sent_file = next((tmp_path / "sent").glob("*.parquet"))
     shutil.copy(sent_file, d / "z_sentinel.parquet")
 
-    out = streaming_events.run_sessions_to_memory(spark, str(d), "t_sessions")
+    out = streaming_events.run_to_memory(
+        spark,
+        streaming_events.session_rollup(_events(spark, str(d))),
+        "t_sessions",
+    )
     got = {
         (r.user_id, r.session_start_s): (r.n_events, r.sum_value_x1000)
         for r in out.where("user_id >= 0").collect()
@@ -79,16 +109,20 @@ def test_streaming_dedup_within_watermark(spark, events_dir):
     """Built-in dropDuplicatesWithinWatermark: exactly one row per key
     survives (count matches the batch countDistinct), and unique keys pass
     through untouched."""
-    out = streaming_events.run_dedup_to_memory(
-        spark, events_dir, ["user_id", "event_type"], "t_dedup"
-    )
+
+    def dedup(keys, query_name):
+        return streaming_events.run_to_memory(
+            spark,
+            streaming_events.dedup_within_watermark(_events(spark, events_dir), keys),
+            query_name,
+        )
+
+    out = dedup(["user_id", "event_type"], "t_dedup")
     batch = spark.read.parquet(f"{SF}/events.parquet")
     want = batch.select("user_id", "event_type").distinct().count()
     assert out.count() == want
     # unique key -> passthrough
-    out2 = streaming_events.run_dedup_to_memory(
-        spark, events_dir, ["event_id"], "t_dedup_id"
-    )
+    out2 = dedup(["event_id"], "t_dedup_id")
     assert out2.count() == batch.count()
 
 
@@ -97,7 +131,16 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
     join expression over the batch table."""
     from pyspark.sql import functions as F
 
-    out = streaming_events.run_interval_join_to_memory(spark, events_dir)
+    ev1 = _events(spark, events_dir)
+    ev2 = _events(spark, events_dir)
+    out = streaming_events.run_to_memory(
+        spark,
+        streaming_events.interval_join(
+            ev1.where(F.col("event_type") == "purchase"),
+            ev2.where(F.col("event_type") == "signup"),
+        ),
+        "events_ssjoin",
+    )
     got = {(r.user_id, r.purchase_id, r.signup_id) for r in out.collect()}
     ev = spark.read.parquet(f"{SF}/events.parquet")
     want_df = streaming_events.interval_join(
@@ -110,11 +153,32 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
 
 
 def test_streaming_foreach_batch_to_store(spark, events_dir, tmp_path):
+    """Update-mode aggregate rows land in the store with lineage, and a
+    rerun of the whole stream is a no-op (every epoch already committed ->
+    zero new snapshots, same rows)."""
     store = SnapshotStore(tmp_path / "ckpt")
-    streaming_events.run_foreach_batch_to_store(spark, events_dir, store)
-    out = store.read_stage(spark, "stream_rollup")
-    assert out.count() > 0
+
+    def run():
+        sx.run_increment_maintenance(
+            spark,
+            streaming_events.windowed_rollup(_events(spark, events_dir)),
+            store,
+            "stream_rollup",
+            lambda batch: batch,
+        )
+
+    def rows():
+        return sorted(map(tuple, store.read_stage(spark, "stream_rollup").collect()))
+
+    run()
+    landed = rows()
+    assert len(landed) > 0
     assert store.snapshots("stream_rollup")  # lineage/snapshot rows landed
+
+    n_snaps = len(store.snapshots("stream_rollup"))
+    run()
+    assert len(store.snapshots("stream_rollup")) == n_snaps
+    assert rows() == landed
 
 
 def test_streaming_extent_maintenance_equals_batch(spark, tmp_path):
@@ -124,8 +188,10 @@ def test_streaming_extent_maintenance_equals_batch(spark, tmp_path):
     import __spark_entry__ as e
     from pyspark.sql import functions as F
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.operators.grouping import collection_extents
-    from stac_catalog_builder_spark.streaming import extents as sx
+    from stac_catalog_builder_spark.operators.grouping import (
+        collection_extents,
+        merge_extent_summaries,
+    )
 
     keys = ["collection_id", "tile_id"]
     cols = keys + ["image_id", "fp_w", "fp_s", "fp_e", "fp_n", "datetime"]
@@ -135,7 +201,19 @@ def test_streaming_extent_maintenance_equals_batch(spark, tmp_path):
     assigned.repartition(4).write.mode("overwrite").parquet(src)
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
-    sx.run_extent_maintenance(spark, src, store, keys)
+
+    def maintain():
+        _maintain(
+            spark, src, assigned.schema, store, "extent_increments",
+            lambda b: collection_extents(b, keys),
+        )
+
+    def current():
+        return merge_extent_summaries(
+            keys, _increments(spark, store, "extent_increments")
+        )
+
+    maintain()
     assert len(store.snapshots("extent_increments")) >= 2  # multi-epoch run
 
     def canon(df):
@@ -154,16 +232,16 @@ def test_streaming_extent_maintenance_equals_batch(spark, tmp_path):
             for r in df.collect()
         )
 
-    live = canon(sx.current_extents(spark, store, keys))
+    live = canon(current())
     batch = canon(collection_extents(spark.read.parquet(src), keys))
     assert live == batch and len(live) > 0
 
     # re-running the whole stream over the same source must be a no-op
     # (every epoch already committed -> zero new snapshots, same extents)
     n_snaps = len(store.snapshots("extent_increments"))
-    sx.run_extent_maintenance(spark, src, store, keys)
+    maintain()
     assert len(store.snapshots("extent_increments")) == n_snaps
-    assert canon(sx.current_extents(spark, store, keys)) == batch
+    assert canon(current()) == batch
 
 
 def test_streaming_hll_maintenance_equals_batch(spark, tmp_path):
@@ -172,9 +250,13 @@ def test_streaming_hll_maintenance_equals_batch(spark, tmp_path):
     (registers are integers — no tolerance), and a full stream replay is a
     no-op (idempotent max + epoch lineage)."""
     import __spark_entry__ as e
-    from stac_catalog_builder_spark.operators.sketches import hll_distinct
+    from stac_catalog_builder_spark.operators.sketches import (
+        hll_distinct,
+        hll_estimate,
+        hll_merge,
+        hll_registers,
+    )
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.streaming import extents as sx
 
     assigned = e._assigned(spark, "/root/testdata/sf0.001").select(
         "collection_id", "phash"
@@ -183,20 +265,32 @@ def test_streaming_hll_maintenance_equals_batch(spark, tmp_path):
     assigned.repartition(4).write.mode("overwrite").parquet(src)
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
-    sx.run_hll_maintenance(spark, src, store, ["collection_id"], "phash")
+    g = ["collection_id"]
+
+    def maintain():
+        _maintain(
+            spark, src, assigned.schema, store, "hll_increments",
+            lambda b: hll_registers(b, g, "phash"),
+        )
+
+    def current():
+        regs = _increments(spark, store, "hll_increments")
+        return hll_estimate(hll_merge(regs, g), g)
+
+    maintain()
     assert len(store.snapshots("hll_increments")) >= 2  # multi-epoch run
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    live = canon(sx.current_hll(spark, store, ["collection_id"]))
+    live = canon(current())
     batch = canon(hll_distinct(spark.read.parquet(src), ["collection_id"], "phash"))
     assert live == batch and len(live) > 0
 
     n_snaps = len(store.snapshots("hll_increments"))
-    sx.run_hll_maintenance(spark, src, store, ["collection_id"], "phash")
+    maintain()
     assert len(store.snapshots("hll_increments")) == n_snaps
-    assert canon(sx.current_hll(spark, store, ["collection_id"])) == batch
+    assert canon(current()) == batch
 
 
 def test_streaming_cms_maintenance_equals_batch(spark, tmp_path):
@@ -207,9 +301,8 @@ def test_streaming_cms_maintenance_equals_batch(spark, tmp_path):
     unlike the HLL's idempotent max)."""
     import __spark_entry__ as e
     from pyspark.sql import functions as F
-    from stac_catalog_builder_spark.operators.sketches import cms_registers
+    from stac_catalog_builder_spark.operators.sketches import cms_merge, cms_registers
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.streaming import extents as sx
 
     keyed = e._assigned(spark, "/root/testdata/sf0.001").select(
         "collection_id",
@@ -221,20 +314,31 @@ def test_streaming_cms_maintenance_equals_batch(spark, tmp_path):
     keyed.repartition(4).write.mode("overwrite").parquet(src)
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
-    sx.run_cms_maintenance(spark, src, store, ["collection_id"], "k")
+    g = ["collection_id"]
+
+    def maintain():
+        _maintain(
+            spark, src, keyed.schema, store, "cms_increments",
+            lambda b: cms_registers(b, g, "k"),
+        )
+
+    def current():
+        return cms_merge(_increments(spark, store, "cms_increments"), g)
+
+    maintain()
     assert len(store.snapshots("cms_increments")) >= 2  # multi-epoch run
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    live = canon(sx.current_cms(spark, store, ["collection_id"]))
+    live = canon(current())
     batch = canon(cms_registers(spark.read.parquet(src), ["collection_id"], "k"))
     assert live == batch and len(live) > 0
 
     n_snaps = len(store.snapshots("cms_increments"))
-    sx.run_cms_maintenance(spark, src, store, ["collection_id"], "k")
+    maintain()
     assert len(store.snapshots("cms_increments")) == n_snaps
-    assert canon(sx.current_cms(spark, store, ["collection_id"])) == batch
+    assert canon(current()) == batch
 
 
 def test_streaming_hist_maintenance_equals_batch(spark, tmp_path):
@@ -245,11 +349,11 @@ def test_streaming_hist_maintenance_equals_batch(spark, tmp_path):
     from pyspark.sql import functions as F
     from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators.sketches import (
+        hist_merge,
         hist_quantiles,
         hist_registers,
     )
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.streaming import extents as sx
 
     vals = synth.images(spark, "/root/testdata/sf0.001").select(
         "asset_type", F.length("caption").alias("v")
@@ -259,13 +363,20 @@ def test_streaming_hist_maintenance_equals_batch(spark, tmp_path):
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
     args = (["asset_type"], "v", 0, 128, 64)
-    sx.run_hist_maintenance(spark, src, store, *args)
+
+    def maintain():
+        _maintain(
+            spark, src, vals.schema, store, "hist_increments",
+            lambda b: hist_registers(b, *args),
+        )
+
+    maintain()
     assert len(store.snapshots("hist_increments")) >= 2
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    live = sx.current_hist(spark, store, ["asset_type"])
+    live = hist_merge(_increments(spark, store, "hist_increments"), ["asset_type"])
     batch = hist_registers(spark.read.parquet(src), *args)
     assert canon(live) == canon(batch) and live.count() > 0
     assert canon(
@@ -273,7 +384,7 @@ def test_streaming_hist_maintenance_equals_batch(spark, tmp_path):
     ) == canon(hist_quantiles(batch, ["asset_type"], [500_000], 0, 128, 64))
 
     n_snaps = len(store.snapshots("hist_increments"))
-    sx.run_hist_maintenance(spark, src, store, *args)
+    maintain()
     assert len(store.snapshots("hist_increments")) == n_snaps
 
 
@@ -290,7 +401,6 @@ def test_streaming_moment_maintenance_equals_batch(spark, tmp_path):
         moment_stats,
     )
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.streaming import extents as sx
 
     vals = synth.images(spark, "/root/testdata/sf0.001").select(
         "asset_type", F.length("caption").alias("v")
@@ -299,13 +409,24 @@ def test_streaming_moment_maintenance_equals_batch(spark, tmp_path):
     vals.repartition(4).write.mode("overwrite").parquet(src)
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
-    sx.run_moment_maintenance(spark, src, store, ["asset_type"], "v")
+    g = ["asset_type"]
+
+    def maintain():
+        _maintain(
+            spark, src, vals.schema, store, "moment_increments",
+            lambda b: moment_registers(b, g, "v"),
+        )
+
+    def current():
+        return moment_stats(_increments(spark, store, "moment_increments"), g)
+
+    maintain()
     assert len(store.snapshots("moment_increments")) >= 2
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    live = canon(sx.current_moments(spark, store, ["asset_type"]))
+    live = canon(current())
     batch = canon(
         moment_stats(
             moment_registers(spark.read.parquet(src), ["asset_type"], "v"),
@@ -315,9 +436,9 @@ def test_streaming_moment_maintenance_equals_batch(spark, tmp_path):
     assert live == batch and len(live) > 0
 
     n_snaps = len(store.snapshots("moment_increments"))
-    sx.run_moment_maintenance(spark, src, store, ["asset_type"], "v")
+    maintain()
     assert len(store.snapshots("moment_increments")) == n_snaps
-    assert canon(sx.current_moments(spark, store, ["asset_type"])) == batch
+    assert canon(current()) == batch
 
 
 def test_streaming_fixity_maintenance_equals_batch(spark, tmp_path):
@@ -326,9 +447,11 @@ def test_streaming_fixity_maintenance_equals_batch(spark, tmp_path):
     digest EXACTLY, and a full stream replay is a no-op — the sum lane
     adds and the xor lane xors, so neither tolerates a double-landed
     epoch (same exactly-once reliance as the CMS)."""
-    from stac_catalog_builder_spark.operators.sketches import fixity_registers
+    from stac_catalog_builder_spark.operators.sketches import (
+        fixity_merge,
+        fixity_registers,
+    )
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.streaming import extents as sx
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "lang", "source", "text"
@@ -337,15 +460,24 @@ def test_streaming_fixity_maintenance_equals_batch(spark, tmp_path):
     docs.repartition(4).write.mode("overwrite").parquet(src)
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
-    sx.run_fixity_maintenance(
-        spark, src, store, ["lang", "source"], ["doc_id", "text"]
-    )
+    g = ["lang", "source"]
+
+    def maintain():
+        _maintain(
+            spark, src, docs.schema, store, "fixity_increments",
+            lambda b: fixity_registers(b, g, ["doc_id", "text"]),
+        )
+
+    def current():
+        return fixity_merge(_increments(spark, store, "fixity_increments"), g)
+
+    maintain()
     assert len(store.snapshots("fixity_increments")) >= 2  # multi-epoch run
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    live = canon(sx.current_fixity(spark, store, ["lang", "source"]))
+    live = canon(current())
     batch = canon(
         fixity_registers(
             spark.read.parquet(src), ["lang", "source"], ["doc_id", "text"]
@@ -354,11 +486,9 @@ def test_streaming_fixity_maintenance_equals_batch(spark, tmp_path):
     assert live == batch and len(live) > 0
 
     n_snaps = len(store.snapshots("fixity_increments"))
-    sx.run_fixity_maintenance(
-        spark, src, store, ["lang", "source"], ["doc_id", "text"]
-    )
+    maintain()
     assert len(store.snapshots("fixity_increments")) == n_snaps
-    assert canon(sx.current_fixity(spark, store, ["lang", "source"])) == batch
+    assert canon(current()) == batch
 
 
 def test_streaming_composite_maintenance_equals_batch(spark, tmp_path):
@@ -368,10 +498,14 @@ def test_streaming_composite_maintenance_equals_batch(spark, tmp_path):
     addition — a double-landed epoch would skew every shared pixel)."""
     from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators import multimodal
-    from stac_catalog_builder_spark.operators.composite import composite_tiles
+    from stac_catalog_builder_spark.operators.composite import (
+        composite_merge,
+        composite_render,
+        composite_state,
+        composite_tiles,
+    )
     from stac_catalog_builder_spark.operators.footprints import with_footprint
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
-    from stac_catalog_builder_spark.streaming import extents as sx
 
     imgs = multimodal.with_encoded_bytes(
         with_footprint(synth.images(spark, "/root/testdata/sf0.001")).where(
@@ -382,7 +516,18 @@ def test_streaming_composite_maintenance_equals_batch(spark, tmp_path):
     imgs.repartition(4).write.mode("overwrite").parquet(src)
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
-    sx.run_composite_maintenance(spark, src, store)
+
+    def maintain():
+        _maintain(
+            spark, src, imgs.schema, store, "composite_increments", composite_state
+        )
+
+    def current():
+        return composite_render(
+            composite_merge(_increments(spark, store, "composite_increments"))
+        )
+
+    maintain()
     assert len(store.snapshots("composite_increments")) >= 2  # multi-epoch
 
     def canon(df):
@@ -391,11 +536,11 @@ def test_streaming_composite_maintenance_equals_batch(spark, tmp_path):
             for r in df.collect()
         )
 
-    live = canon(sx.current_composite(spark, store))
+    live = canon(current())
     batch = canon(composite_tiles(spark.read.parquet(src)))
     assert live == batch and len(live) > 0
 
     n_snaps = len(store.snapshots("composite_increments"))
-    sx.run_composite_maintenance(spark, src, store)
+    maintain()
     assert len(store.snapshots("composite_increments")) == n_snaps
-    assert canon(sx.current_composite(spark, store)) == batch
+    assert canon(current()) == batch
