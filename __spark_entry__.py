@@ -858,10 +858,11 @@ def q_knn_cellring(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force is proven in BENCH/GROWTH.md (3.7x at 76.8M rows) — and per
     VERDICT r3 #4 the driver's hard signal now exercises it directly (it
     was pytest-only in r3). At sparse scales (sf<=0.01) queries whose inner
-    ring cannot certify alpha*k rows route to the exact fallback — slower,
-    never wrong. max_abs_lat comes from the synthetic lake's schema
-    contract (lat in [-60, 60), FIXTURES.md §1) — lake statistics in place
-    of a per-call full scan."""
+    ring cannot certify alpha*k rows route to the exact in-plan fallback —
+    slower, never wrong. The call runs only the cell-count statistics
+    collect; certification and fallback run when the result is consumed.
+    max_abs_lat comes from the synthetic lake's schema contract (lat in
+    [-60, 60), FIXTURES.md §1)."""
     out = knn_join_cellring(
         _images_fp(spark, sf_dir),
         synth.knn_query_points(sf_dir),
@@ -877,7 +878,8 @@ def q_knn_cellring_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only (pytest: row-identical to q_knn): the FIXED-radius cellring
     variant (r2/r3's driver entry — res=8 keeps ring_deg 6.3 so no query is
     antimeridian/pole-unsafe). Kept as the simpler configuration for
-    uniform-density corpora; the adaptive mode above is the default."""
+    uniform-density corpora; the adaptive mode above is the default. The
+    call runs no Spark job: it returns one lazy plan."""
     out = knn_join_cellring(
         _images_fp(spark, sf_dir),
         synth.knn_query_points(sf_dir),

@@ -91,7 +91,7 @@ def suggest_cell_res(n_rows: int) -> int:
 
 
 def bench_knn(spark) -> list[dict]:
-    from stac_catalog_builder_spark import cache, synth
+    from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators import knn
 
     queries = synth.knn_queries(spark, SF_DIR)
@@ -120,7 +120,6 @@ def bench_knn(spark) -> list[dict]:
                 cell_col=f"hex{res}",
                 max_abs_lat=60.0,
             ).collect()
-            cache.release("knn_cellring")
 
         # INTERLEAVED measurement: this VM has multi-minute noisy-neighbor
         # windows that can swallow all of one variant's runs; pairing the two
@@ -141,7 +140,7 @@ def bench_knn(spark) -> list[dict]:
                 "brute_sec": round(min(tb), 2),
                 "cellring_sec": round(min(tr), 2),
                 "speedup": round(ratios[len(ratios) // 2], 2),
-                "routing": dict(knn.LAST_CELLRING_STATS),
+                "routing": knn.LAST_CELLRING_STATS["routing"].first().asDict(),
             }
         )
         print(out[-1], file=sys.stderr)

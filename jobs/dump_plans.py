@@ -120,9 +120,14 @@ def main() -> None:
             "expression, no pandas UDF), and a Partial WindowGroupLimit "
             "before the window exchange so dense hot clusters ship ~k rows "
             "per task, never the whole cluster into one window task. "
-            "(Adaptive mode: the per-query radii derive from a separate "
-            "dimension-sized stats aggregate; the candidate plan below is "
-            "unchanged.)",
+            "Certification is in the plan (per-query count and k-th "
+            "distance joined with the broadcast bound); the exact fallback "
+            "for uncertified queries is a broadcast cross join of the fact "
+            "projection with the pending queries through the same JVM rank "
+            "tail, unioned with the certified rows — no Python in either "
+            "branch but the cell-encode UDF. (Adaptive mode: the per-query "
+            "radii derive from a separate dimension-sized stats aggregate; "
+            "the plan below is unchanged.)",
             e.queries()["knn_cellring"](spark, SF),
         ),
         (

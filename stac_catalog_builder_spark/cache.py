@@ -1,7 +1,7 @@
 """Scoped cache lifecycle for operator-internal ``persist()`` tables.
 
-LSH/kNN operators persist an intermediate (the materialized signature or
-candidate table) because it feeds several downstream subtrees — the size
+LSH operators persist an intermediate (the materialized signature table)
+because it feeds several downstream subtrees — the size
 aggregation AND both self-join sides; without the cache the vectorized
 signature UDF (the dominant cost at 100 TB) would run 2-3x per call. The
 cache must outlive the operator call (Spark evaluates lazily: the caller

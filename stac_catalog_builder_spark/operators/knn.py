@@ -14,15 +14,19 @@ Two implementations with identical results:
   to an arbitrary argpartition choice.
 
 - ``knn_join_cellring``: hex-cell pruned kNN (H3-like k-ring, SURVEY.md §2.3
-  J5) in ONE shot: every query's k-ring is exploded to (cell, query_id) rows
-  driver-side (dimension-sized), broadcast-joined against the fact table's
-  cell column, and window-ranked. A query's result is provably exact when its
-  k-th candidate distance is below the haversine lower bound of leaving the
-  ring; the (usually empty) remainder falls back to one ``knn_join`` pass.
-  No driver-side ring loop, no per-ring ``.toPandas()`` — two Spark jobs max.
+  J5) as ONE lazy plan: every query's k-ring is exploded to (cell, query_id)
+  rows driver-side (dimension-sized), broadcast-joined against the fact
+  table's cell column, and window-ranked. A query's result is provably exact
+  when its k-th candidate distance is below the haversine lower bound of
+  leaving the ring; that test is an in-plan predicate, and the uncertified
+  remainder is answered in the same plan by an exact JVM scan of the fact
+  projection against the broadcast pending queries. Calling it runs no Spark
+  job in fixed-radius mode (adaptive mode runs its one cell-count
+  statistics pass); when every query certifies, AQE replaces the fallback
+  with an empty relation at run time.
 
-The haversine lower bound per planar degree is computed from the *actual*
-latitude domain of the data: ``cos(max|lat|)`` for longitude shrink times
+The haversine lower bound per planar degree is computed from the caller's
+bound on the latitude domain: ``cos(max|lat|)`` for longitude shrink times
 ``2/pi`` for the ``sin(x) <= x`` compression of the haversine longitude term
 — a true lower bound at any latitude (the previous fixed 0.5 margin was only
 valid below 60°). Queries whose ring approaches the antimeridian or a pole
@@ -43,7 +47,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import cache
 from ..functions.cells import (
     hex_cell_np,
     hex_cell_udf,
@@ -58,8 +61,33 @@ _OUT_SCHEMA = "query_id string, image_id string, dist_m double"
 _METERS_PER_DEG_LAT = 111194.9  # pi * 6371000 / 180
 
 # Last-call routing stats for knn_join_cellring (observability: how many
-# queries the ring proved complete vs paid the exact full-scan fallback).
-LAST_CELLRING_STATS: dict[str, int] = {}
+# queries the ring proved complete vs paid the exact fallback scan).
+# "routing" holds an UNEVALUATED one-row frame (n_queries, satisfied,
+# fallback, edge_unsafe): reading it runs its own Spark job, so the
+# operator call itself stays job-free.
+LAST_CELLRING_STATS: dict[str, DataFrame] = {}
+
+
+def _queries_pdf(queries) -> pd.DataFrame:
+    """The (query_id, qlon, qlat) dimension, driver-side. A pandas frame is
+    taken as is; a Spark frame costs one collect."""
+    if isinstance(queries, pd.DataFrame):
+        return queries.loc[:, ["query_id", "qlon", "qlat"]]
+    return queries.select("query_id", "qlon", "qlat").toPandas()
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Rank (query_id, image_id, dist_m) candidates per query by (dist_m,
+    image_id) and keep rank <= k. The rank filter plans Spark's
+    WindowGroupLimit: a MAP-SIDE top-k per query before the window exchange,
+    so a query whose candidates cover a dense cluster ships ~k rows per task
+    instead of shuffling the whole cluster into one window task."""
+    w = Window.partitionBy("query_id").orderBy(F.col("dist_m"), F.col("image_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "image_id", "dist_m")
+    )
 
 
 def _partial_topk_gen(queries_pdf: pd.DataFrame, k: int):
@@ -102,20 +130,10 @@ def knn_join(images: DataFrame, queries, k: int) -> DataFrame:
     dimension driver-side anyway, so a caller that already holds it (e.g.
     from lake metadata or a driver-side read) skips one whole Spark job.
     """
-    queries_pdf = (
-        queries.loc[:, ["query_id", "qlon", "qlat"]]
-        if isinstance(queries, pd.DataFrame)
-        else queries.select("query_id", "qlon", "qlat").toPandas()
-    )
     partials = images.select("image_id", "lon", "lat").mapInPandas(
-        _partial_topk_gen(queries_pdf, k), schema=_OUT_SCHEMA
+        _partial_topk_gen(_queries_pdf(queries), k), schema=_OUT_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m"), F.col("image_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "image_id", "dist_m")
-    )
+    return _top_k(partials, k)
 
 
 def _adaptive_radii(
@@ -154,7 +172,8 @@ def _adaptive_radii(
     # Arrow path (pandas), not a python tuple list: createDataFrame over
     # py4j pickles row-by-row — measurable at 10^4+ rows per call
     inner_df = spark.createDataFrame(
-        pd.DataFrame({"cell": np.fromiter(sorted(inner), dtype=np.int64)})
+        pd.DataFrame({"cell": np.fromiter(sorted(inner), dtype=np.int64)}),
+        "cell bigint",
     )
     cnt = {
         r["cell"]: r["n"]
@@ -184,10 +203,11 @@ def knn_join_cellring(
     images: DataFrame,
     queries,
     k: int,
+    *,
+    max_abs_lat: float,
     res: int = 7,
     ring_radius: int | None = 16,
     cell_col: str | None = None,
-    max_abs_lat: float | None = None,
     alpha: int = 4,
     r_inner_max: int = 12,
     r_max: int = 64,
@@ -200,55 +220,46 @@ def knn_join_cellring(
     broadcast-equi-joins the fact side; (3) one window ranks candidates per
     query (pure JVM + map-side WindowGroupLimit). A query is *provably*
     complete when it has >= k candidates and its k-th distance is within the
-    haversine lower bound of leaving its ring; the remaining queries (sparse
-    regions, antimeridian/pole edge cases) are answered by ONE exact
-    ``knn_join`` fallback pass. Results are identical to ``knn_join``
-    (same oracle).
+    haversine lower bound of leaving its ring. That test runs in the plan
+    against a broadcast per-query bound; the remaining queries (sparse
+    regions, antimeridian/pole edge cases) are answered by an exact scan of
+    the fact projection against the broadcast *pending* queries, ranked by
+    the same JVM tail. Results are identical to ``knn_join`` (same oracle).
+    The call returns a lazy plan; when every query certifies, the pending
+    frame comes back empty at run time and AQE drops the fallback scan.
 
     ``ring_radius``: a fixed radius for every query, or **None for
     ADAPTIVE per-query radii** derived from exact cell-count statistics
     (see ``_adaptive_radii``) — the mode that survives heavy density skew:
     with a fixed radius, a query inside a hot cluster drags the whole
     cluster in as candidates; adaptively it gets a radius just large enough
-    to certify its k-th neighbor. Adaptive mode adds one cheap
-    statistics aggregate (lake metadata at production scale) and works best
-    with a precomputed ``cell_col``.
+    to certify its k-th neighbor. Adaptive mode runs one cheap statistics
+    aggregate at call time (lake metadata at production scale) and works
+    best with a precomputed ``cell_col``.
 
     ``cell_col`` names a PRECOMPUTED hex cell column at ``res`` (the
     production shape: the lake table stores the cell, the scan prunes on it
     and no per-call UDF pass runs). Without it the cell derives on the fly.
 
     ``max_abs_lat`` is the caller's bound on the fact table's |lat| domain
-    (e.g. from lake statistics — parquet/Iceberg column min/max metadata, or
-    ``sources.layout.file_ranges`` on a lat-clustered table — or the schema
-    contract of the ingest). Supplying it removes the only full-table pass
-    outside the candidate join; when None the operator computes it with one
-    ``max(abs(lat))`` scan (correct but a second 100 TB pass). The bound must
-    HOLD (|lat| <= max_abs_lat for every fact row) — a violated bound can
-    wrongly certify a query as complete; it does not need to be tight (a
-    loose bound only shrinks the provable radius and routes more queries to
-    the exact fallback).
+    (from lake statistics — parquet/Iceberg column min/max metadata — or the
+    schema contract of the ingest). The bound must HOLD (|lat| <=
+    max_abs_lat for every fact row) — a violated bound can wrongly certify a
+    query as complete; it does not need to be tight (a loose bound only
+    shrinks the provable radius and routes more queries to the exact
+    fallback). ``90.0`` is always valid: slow, because most queries then
+    fall back, but never wrong.
     """
     spark = images.sparkSession
     # pandas accepted directly, same contract as knn_join: the dimension is
     # consumed driver-side either way, a DataFrame just costs one more job
-    queries_pdf = (
-        queries.loc[:, ["query_id", "qlon", "qlat"]]
-        if isinstance(queries, pd.DataFrame)
-        else queries.select("query_id", "qlon", "qlat").toPandas()
-    )
-    if queries_pdf.empty:
-        # no queries: the brute-force path returns an empty result with the
-        # right schema (the numpy bound math below needs >= 1 query row)
-        return knn_join(images, queries, k)
+    queries_pdf = _queries_pdf(queries)
     q_lon = queries_pdf["qlon"].to_numpy()
     q_lat = queries_pdf["qlat"].to_numpy()
     q_cells = hex_cell_np(q_lon, q_lat, res)
 
     # provable meters-per-planar-degree lower bound over the joint lat domain
-    if max_abs_lat is None:
-        max_abs_lat = float(images.agg(F.max(F.abs(F.col("lat")))).first()[0] or 0.0)
-    max_abs_lat = max(float(max_abs_lat), float(np.abs(q_lat).max()))
+    max_abs_lat = max(float(max_abs_lat), float(np.abs(q_lat).max(initial=0.0)))
     shrink = max(np.cos(np.radians(min(max_abs_lat, 89.9))) * (2.0 / np.pi), 1e-6)
     min_width_m = hex_min_width_deg(res) * _METERS_PER_DEG_LAT * shrink
 
@@ -260,14 +271,6 @@ def knn_join_cellring(
     fact = images.select("image_id", "lon", "lat", cell.alias("cell"))
 
     if ring_radius is None:
-        if cell_col is None:
-            # adaptive mode runs TWO jobs over the fact side (the cell-count
-            # statistics aggregate, then the candidate join); without a
-            # precomputed cell column each would re-run the encode UDF over
-            # the whole table — persist the derived (id, lon, lat, cell)
-            # projection across them. A lake table with a stored cell column
-            # (the production shape) skips both the UDF and this cache.
-            fact = cache.scoped_persist("knn_cellring_fact", fact)
         radii = _adaptive_radii(
             fact, queries_pdf, q_cells, k, res, shrink, alpha, r_inner_max, r_max
         )
@@ -285,102 +288,62 @@ def knn_join_cellring(
         | (radii < 0)
     )
 
-    qid_chunks: list[np.ndarray] = []
-    cell_chunks: list[np.ndarray] = []
+    qid_chunks: list[np.ndarray] = [np.array([], dtype=object)]
+    cell_chunks: list[np.ndarray] = [np.array([], dtype=np.int64)]
     for i, qid in enumerate(queries_pdf["query_id"]):
         if edge_unsafe[i]:
             continue
         ring = hex_kring_np(int(q_cells[i]), int(radii[i]))
         qid_chunks.append(np.full(len(ring), qid, dtype=object))
         cell_chunks.append(ring.astype(np.int64))
-    ring_pdf = pd.DataFrame(
-        {
-            "query_id": np.concatenate(qid_chunks) if qid_chunks else np.array([], dtype=object),
-            "cell": np.concatenate(cell_chunks) if cell_chunks else np.array([], dtype=np.int64),
-        }
-    )
     # Arrow path: a python tuple list here costs a py4j pickle per ring cell
     # (10^4-10^5 rows per call in adaptive mode)
-    ring_df = spark.createDataFrame(ring_pdf, "query_id string, cell bigint")
-    qdim = spark.createDataFrame(queries_pdf)
-
-    cand = fact.join(F.broadcast(ring_df), "cell").join(F.broadcast(qdim), "query_id")
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m"), F.col("image_id"))
-    # Distance + rank stay PURE JVM: haversine_col keeps the candidate path
-    # inside whole-stage codegen (no Arrow round trip), and the rank<=k
-    # filter triggers Spark's WindowGroupLimit — a MAP-SIDE top-k per query
-    # before the window exchange, so a hot query whose ring covers a dense
-    # cluster (10^7 candidates) ships only ~k rows per task instead of
-    # shuffling the whole cluster into one window task (guarded by
-    # tests/test_plans.py::test_cellring_plan_jvm_with_group_limit).
-    ranked = (
-        cand.withColumn(
-            "dist_m",
-            haversine_col(F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat")),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "image_id", "dist_m")
+    ring_df = spark.createDataFrame(
+        pd.DataFrame(
+            {"query_id": np.concatenate(qid_chunks), "cell": np.concatenate(cell_chunks)}
+        ),
+        "query_id string, cell bigint",
     )
-    # cache: the ranked candidates feed the completeness-stats collect AND the
-    # returned result; lifecycle is scoped (replaced on the next call,
-    # releasable via cache.release())
-    ranked = cache.scoped_persist("knn_cellring", ranked)
-
-    # per-query completeness stats: dimension-sized collect (Q rows)
-    stats = {
-        r.query_id: (r.n, r.kth)
-        for r in ranked.groupBy("query_id")
+    qdim = spark.createDataFrame(
+        queries_pdf.assign(bound_m=bound_m, safe=~edge_unsafe),
+        "query_id string, qlon double, qlat double, bound_m double, safe boolean",
+    )
+    # Distance + rank stay PURE JVM on both branches: haversine_col keeps
+    # them inside whole-stage codegen (no Arrow round trip) — guarded by
+    # tests/test_plans.py::test_cellring_plan_jvm_with_group_limit.
+    dist = haversine_col(F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat"))
+    ranked = _top_k(
+        fact.join(F.broadcast(ring_df), "cell")
+        .join(F.broadcast(qdim.select("query_id", "qlon", "qlat")), "query_id")
+        .withColumn("dist_m", dist),
+        k,
+    )
+    cert = (
+        ranked.groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n"), F.max("dist_m").alias("kth"))
-        .collect()
-    }
-    satisfied = [
-        qid
-        for i, qid in enumerate(queries_pdf["query_id"])
-        if not edge_unsafe[i]
-        and stats.get(qid, (0, float("inf")))[0] >= k
-        and stats[qid][1] <= bound_m[i]
-    ]
-    sat_set = set(satisfied)
-    pending = [q for q in queries_pdf["query_id"] if q not in sat_set]
-    LAST_CELLRING_STATS.update(
-        n_queries=len(queries_pdf),
-        satisfied=len(satisfied),
-        fallback=len(pending),
-        edge_unsafe=int(edge_unsafe.sum()),
+        .join(F.broadcast(qdim), "query_id")
+        .where(F.col("safe") & (F.col("n") >= k) & (F.col("kth") <= F.col("bound_m")))
+        .select("query_id")
     )
-
-    # routing via broadcast SEMI-joined id frames, not isin(): a literal IN
-    # list inlines every id into the plan (10^5 queries -> a 10^5-term
-    # predicate Catalyst must carry through every rule), while a broadcast
-    # id frame stays one dimension-sized exchange regardless of Q
-    def _id_frame(ids: list) -> DataFrame:
-        return spark.createDataFrame(
-            pd.DataFrame({"query_id": ids}), "query_id string"
-        )
-
-    done = (
-        ranked.join(F.broadcast(_id_frame(satisfied)), "query_id", "semi")
-        if satisfied
-        else None
+    # the exact fallback reads the fact PROJECTION: column pruning drops the
+    # unused cell column, so the encode UDF never runs on this branch
+    pending = qdim.join(cert, "query_id", "anti").select("query_id", "qlon", "qlat")
+    fallback = _top_k(
+        fact.select("image_id", "lon", "lat")
+        .crossJoin(F.broadcast(pending))
+        .withColumn("dist_m", dist),
+        k,
     )
-    if pending:
-        # fall back over the (possibly persisted) fact PROJECTION, not the
-        # caller's frame: identical (image_id, lon, lat) rows, but in
-        # adaptive mode the projection is already cached — the exact pass
-        # then reads the cache instead of re-running the caller's scan
-        # lineage (measured ~0.6s per call at sf0.1 for one edge-unsafe
-        # query). Column pruning drops the unused cell column, so the
-        # encode UDF never runs on this path.
-        # the pending-query dimension is already collected (queries_pdf);
-        # filter it driver-side instead of semi-joining the caller's frame
-        fallback = knn_join(
-            fact.select("image_id", "lon", "lat"),
-            queries_pdf[queries_pdf["query_id"].isin(set(pending))],
-            k,
+    LAST_CELLRING_STATS["routing"] = (
+        qdim.join(cert.withColumn("ok", F.lit(1)), "query_id", "left")
+        .agg(
+            F.count(F.lit(1)).alias("n_queries"),
+            F.count("ok").alias("satisfied"),
+            F.count_if(F.col("ok").isNull()).alias("fallback"),
+            F.count_if(~F.col("safe")).alias("edge_unsafe"),
         )
-        return done.unionByName(fallback) if done is not None else fallback
-    return done
+    )
+    return ranked.join(cert, "query_id", "semi").unionByName(fallback)
 
 
 def radius_join(

@@ -3,12 +3,15 @@ path must produce the same rows as the on-the-fly derivation."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+from conftest import jobs_run_by
 from pyspark.sql import functions as F
 
 import __spark_entry__ as e
 from stac_catalog_builder_spark import synth
 from stac_catalog_builder_spark.functions.cells import hex_cell_udf
+from stac_catalog_builder_spark.operators import knn
 from stac_catalog_builder_spark.operators.knn import knn_join, knn_join_cellring
 
 SF = "/root/testdata/sf0.001"
@@ -21,9 +24,12 @@ def _rows(df) -> set:
 def test_cellring_precomputed_cell_column_equivalent(spark):
     images = e._images_fp(spark, SF)
     queries = synth.knn_queries(spark, SF)
-    derived = knn_join_cellring(images, queries, k=5, res=6)
+    # the synthetic lake's contract: lat in [-60, 60) (FIXTURES.md §1)
+    derived = knn_join_cellring(images, queries, k=5, res=6, max_abs_lat=60.0)
     pre = images.withColumn("hex6", hex_cell_udf(6)(F.col("lon"), F.col("lat")))
-    precomputed = knn_join_cellring(pre, queries, k=5, res=6, cell_col="hex6")
+    precomputed = knn_join_cellring(
+        pre, queries, k=5, res=6, cell_col="hex6", max_abs_lat=60.0
+    )
     brute = knn_join(images, queries, k=5)
     assert _rows(derived) == _rows(precomputed) == _rows(brute)
 
@@ -33,9 +39,6 @@ def test_cellring_adaptive_matches_brute(spark):
     brute-force result, with hot-cluster queries certified at SMALL radii
     (never dragging the whole cluster in) and sparse queries either served
     at large radii or routed to the exact fallback."""
-    import pandas as pd
-
-    from stac_catalog_builder_spark import cache, synth
     from stac_catalog_builder_spark.operators.footprints import with_footprint
 
     SF01 = "/root/testdata/sf0.01"
@@ -52,7 +55,6 @@ def test_cellring_adaptive_matches_brute(spark):
     pd.testing.assert_frame_equal(
         brute.reset_index(drop=True), adaptive.reset_index(drop=True)
     )
-    cache.release()
 
 
 def test_entry_cellring_fixed_matches_brute(spark):
@@ -60,12 +62,103 @@ def test_entry_cellring_fixed_matches_brute(spark):
     driver config) must stay row-identical to the exact brute entry — its
     exactness evidence now that the driver's oracle row exercises the
     adaptive mode instead (VERDICT r3 #4)."""
-    from stac_catalog_builder_spark import cache
-
     fixed = e.queries()["knn_cellring_fixed"](spark, SF)
     brute = e.queries()["knn"](spark, SF).select("query_id", "rank", "image_id")
     assert _rows(fixed) == _rows(brute)
-    cache.release()
+
+
+def test_cellring_edge_routing_exact(spark):
+    """The antimeridian, pole and empty-ring routes to the exact fallback
+    return exactly ``knn_join``'s rows, in both radius modes. One dense
+    query certifies in its ring; the seam pair (lon +-179.99, nearest
+    images across the seam), the lat-85 query and the sparse query (no
+    image anywhere near its ring) must all fall back."""
+    rng = np.random.RandomState(11)
+    lon = np.concatenate(
+        [
+            rng.uniform(9.8, 10.2, 400),  # dense cluster around q_dense
+            (rng.uniform(179.9, 180.1, 40) + 180.0) % 360.0 - 180.0,  # seam
+            rng.uniform(-180.0, 180.0, 200),  # polar cap band
+        ]
+    )
+    lat = np.concatenate(
+        [
+            rng.uniform(9.8, 10.2, 400),
+            rng.uniform(19.9, 20.1, 40),
+            rng.uniform(84.0, 86.0, 200),
+        ]
+    )
+    images = spark.createDataFrame(
+        pd.DataFrame(
+            {"image_id": [f"img_{i:04d}" for i in range(len(lon))], "lon": lon, "lat": lat}
+        ),
+        "image_id string, lon double, lat double",
+    )
+    queries = pd.DataFrame(
+        {
+            "query_id": ["q_dense", "q_seam_e", "q_seam_w", "q_pole", "q_sparse"],
+            "qlon": [10.0, 179.99, -179.99, 30.0, -100.0],
+            "qlat": [10.0, 20.0, 20.0, 85.0, -30.0],
+        }
+    )
+    cols = ["query_id", "rank", "image_id"]
+    brute = knn_join(images, queries, k=5).orderBy(cols[:2]).toPandas()
+    routing = {}
+    for mode, radius in (("fixed", 16), ("adaptive", None)):
+        got = (
+            knn_join_cellring(
+                images, queries, k=5, res=8, ring_radius=radius, max_abs_lat=86.0
+            )
+            .orderBy(cols[:2])
+            .toPandas()
+        )
+        pd.testing.assert_frame_equal(got[cols], brute[cols])
+        assert (got["dist_m"] - brute["dist_m"]).abs().max() <= 1e-6
+        routing[mode] = knn.LAST_CELLRING_STATS["routing"].first().asDict()
+    # adaptive radii also send the sparse query (inner ring too empty to
+    # size a radius) down the edge-unsafe route
+    assert routing == {
+        "fixed": {"n_queries": 5, "satisfied": 1, "fallback": 4, "edge_unsafe": 3},
+        "adaptive": {"n_queries": 5, "satisfied": 1, "fallback": 4, "edge_unsafe": 4},
+    }
+
+
+def test_cellring_empty_queries(spark):
+    """An empty query dimension yields an empty result with the output
+    schema and all-zero routing, in both radius modes."""
+    images = spark.createDataFrame(
+        [("img_0", 10.0, 10.0)], "image_id string, lon double, lat double"
+    )
+    queries = pd.DataFrame(
+        {"query_id": pd.Series([], dtype=object), "qlon": [], "qlat": []}
+    )
+    for radius in (16, None):
+        out = knn_join_cellring(
+            images, queries, k=5, res=8, ring_radius=radius, max_abs_lat=60.0
+        )
+        assert out.columns == ["query_id", "rank", "image_id", "dist_m"]
+        assert out.count() == 0
+        routing = knn.LAST_CELLRING_STATS["routing"].first().asDict()
+        assert set(routing.values()) == {0}
+
+
+def test_cellring_call_time_jobs(spark):
+    """Calling the operator builds a lazy plan: the fixed-radius mode runs
+    no Spark job, and the adaptive mode runs only its cell-count statistics
+    collect (a broadcast of the ring-cell frame, the AQE shuffle-map job and
+    the result job)."""
+    images = e._images_fp(spark, SF)
+    queries = synth.knn_query_points(SF)
+
+    def call(radius):
+        return lambda: knn_join_cellring(
+            images, queries, k=5, res=8, ring_radius=radius, max_abs_lat=60.0
+        )
+
+    _, fixed = jobs_run_by(spark, "knn-cellring-fixed", call(16))
+    _, adaptive = jobs_run_by(spark, "knn-cellring-adaptive", call(None))
+    assert fixed == []
+    assert len(adaptive) <= 3, adaptive
 
 
 # --- radius_join -------------------------------------------------------------

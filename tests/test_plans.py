@@ -111,6 +111,37 @@ def test_cellring_plan_jvm_with_group_limit(spark):
     for line in plan.splitlines():
         if "ArrowEvalPython" in line or "BatchEvalPython" in line:
             assert "_enc(" in line, line
+    # the exact fallback for uncertified queries is in the same JVM plan
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
+
+
+def test_cellring_fallback_dropped_when_all_certify(spark):
+    """When every query certifies in its ring, the pending-query frame is
+    empty at run time and AQE replaces the fallback scan with an empty
+    relation in the final plan."""
+    import numpy as np
+    import pandas as pd
+
+    from stac_catalog_builder_spark.operators.knn import knn_join_cellring
+
+    rng = np.random.RandomState(5)
+    images = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "image_id": [f"img_{i:03d}" for i in range(300)],
+                "lon": rng.uniform(9.5, 10.5, 300),
+                "lat": rng.uniform(9.5, 10.5, 300),
+            }
+        ),
+        "image_id string, lon double, lat double",
+    )
+    queries = pd.DataFrame(
+        {"query_id": ["a", "b"], "qlon": [10.0, 10.2], "qlat": [10.0, 9.9]}
+    )
+    out = knn_join_cellring(images, queries, k=5, res=8, max_abs_lat=60.0)
+    assert len(out.collect()) == 10
+    final = _plan(out)
+    assert "isFinalPlan=true" in final and "EmptyRelation" in final
 
 
 def test_partitioned_pip_plan_shuffle_join_no_python_refine(spark):
