@@ -35,12 +35,14 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
+from stac_catalog_builder_spark.session import local_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 KNN_REPS = tuple(
     int(x) for x in os.environ.get("SPARK_GRAFT_GROWTH_REPS", "64,512").split(",")
 )
 LSH_REPS = (4, 16)  # both < 26: every Caesar rotation unique (no wraparound)
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CORES = int(os.environ.get("SPARK_GRAFT_CPUS") or local_cores())
 
 
 def _timed(fn, warmup: int = 1, runs: int = 3) -> float:
@@ -91,7 +93,7 @@ def suggest_cell_res(n_rows: int) -> int:
 
 
 def bench_knn(spark) -> list[dict]:
-    from stac_catalog_builder_spark import synth
+    from stac_catalog_builder_spark import cache, synth
     from stac_catalog_builder_spark.operators import knn
 
     queries = synth.knn_queries(spark, SF_DIR)
@@ -140,7 +142,7 @@ def bench_knn(spark) -> list[dict]:
                 "brute_sec": round(min(tb), 2),
                 "cellring_sec": round(min(tr), 2),
                 "speedup": round(ratios[len(ratios) // 2], 2),
-                "routing": knn.LAST_CELLRING_STATS["routing"].first().asDict(),
+                "routing": cache.decision("knn.routing"),
             }
         )
         print(out[-1], file=sys.stderr)
@@ -198,7 +200,7 @@ def bench_minhash(spark, reps: tuple[int, ...] = LSH_REPS) -> list[dict]:
         def run():
             n_pairs["v"] = dedup.minhash_candidate_pairs(corpus).count()
             # read the lazy metric while the operator's scoped cache is live
-            salting.update(dedup.SALT_METRICS["minhash_pairs"].first().asDict())
+            salting.update(cache.decision("salt.minhash_pairs"))
             cache.release("minhash_pairs")
 
         t = _timed(run, warmup=1, runs=2)
@@ -237,7 +239,7 @@ def bench_cc(spark, reps: tuple[int, ...] = LSH_REPS) -> list[dict]:
             {
                 "n_docs": n,
                 "wall_sec": round(t, 2),
-                "cc": dict(graph.LAST_CC_STATS),
+                "cc": cache.decision("cc"),
             }
         )
         print(out[-1], file=sys.stderr)

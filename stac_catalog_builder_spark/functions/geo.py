@@ -124,25 +124,19 @@ def bbox_wkt(w: Column, s: Column, e: Column, n: Column) -> Column:
 # Reprojection (parity with reference stacbuilder/projections.py:21-67)
 # ---------------------------------------------------------------------------
 
-# Per-executor transformer cache — the Spark analogue of the reference's
-# @lru_cache'd pyproj transformer (stacbuilder/projections.py:80-104).
-_UTM_CACHE: dict[int, tuple[float, bool]] = {}
-
 _WGS84_A = 6378137.0
 _WGS84_F = 1.0 / 298.257223563
 _UTM_K0 = 0.9996
 
 
 def _utm_params(epsg: int) -> tuple[float, bool]:
-    if epsg not in _UTM_CACHE:
-        if 32601 <= epsg <= 32660:
-            zone, south = epsg - 32600, False
-        elif 32701 <= epsg <= 32760:
-            zone, south = epsg - 32700, True
-        else:
-            raise ValueError(f"unsupported projected EPSG:{epsg}")
-        _UTM_CACHE[epsg] = (-183.0 + 6.0 * zone, south)
-    return _UTM_CACHE[epsg]
+    if 32601 <= epsg <= 32660:
+        zone, south = epsg - 32600, False
+    elif 32701 <= epsg <= 32760:
+        zone, south = epsg - 32700, True
+    else:
+        raise ValueError(f"unsupported projected EPSG:{epsg}")
+    return -183.0 + 6.0 * zone, south
 
 
 def utm_forward_np(lon, lat, epsg: int) -> tuple[np.ndarray, np.ndarray]:

@@ -102,15 +102,6 @@ def _exact_collapse(
     return reps, star
 
 
-# Last-call salting stats per operator tag — the observable signal that
-# recall became approximate (ADVICE r2): an unevaluated one-row frame with
-# columns (oversized_buckets, rows_in_oversized, max_bucket), evaluated only
-# when the caller reads its row. Zero oversized buckets == the candidate set
-# is exact. Read it before releasing the operator's scoped cache: after
-# cache.release the read recomputes the whole signature pipeline.
-SALT_METRICS: dict[str, DataFrame] = {}
-
-
 def _salt_hot_buckets(
     bucketed: DataFrame, key_col: str, max_bucket: int, tag: str
 ) -> DataFrame:
@@ -125,16 +116,17 @@ def _salt_hot_buckets(
     without a hint, so AQE picks broadcast or shuffle from their runtime
     size, and ``salt = pmod(xxhash64(key), ceil(coalesce(_bn, 1) /
     max_bucket))`` is 0 for every bucket that is not oversized. The recall
-    trade is recorded in ``SALT_METRICS[tag]`` as a lazy one-row summary
-    over the same aggregate (0 oversized => candidates exact)."""
+    trade is recorded as the decision ``salt.<tag>``, a lazy one-row
+    summary over the same aggregate (0 oversized => candidates exact)."""
     over = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("_bn")).where(
         F.col("_bn") > max_bucket
     )
-    SALT_METRICS[tag] = over.agg(
+    summary = over.agg(
         F.count(F.lit(1)).alias("oversized_buckets"),
         F.coalesce(F.sum("_bn"), F.lit(0)).alias("rows_in_oversized"),
         F.lit(max_bucket).alias("max_bucket"),
     )
+    cache.record(f"salt.{tag}", summary)
     n_sub = F.ceil(F.coalesce(F.col("_bn"), F.lit(1)) / max_bucket)
     salt = F.pmod(F.xxhash64(F.col(key_col)), n_sub).cast("int")
     return bucketed.join(over, "bucket", "left").withColumn("salt", salt).drop("_bn")
@@ -210,8 +202,8 @@ def minhash_candidate_pairs(
     salted into sub-buckets, capping within-bucket blowup (AQE skew-join
     splits the shuffle but NOT the O(b^2) pair output — this does). Salting
     makes recall approximate for pairs whose ONLY shared band lands in an
-    oversized bucket; ``SALT_METRICS['minhash_pairs']`` reports exactly how
-    much salting each call did (0 oversized buckets => exact candidates).
+    oversized bucket; the decision ``salt.minhash_pairs`` reports exactly
+    how much salting each call did (0 oversized buckets => exact candidates).
     """
     _, rep_pairs, star = minhash_candidate_parts(
         df, key_col=key_col, text_col=text_col, bands=bands, max_bucket=max_bucket
@@ -277,9 +269,9 @@ def simhash_candidate_pairs(
     (blk, val) bucket fits ``max_bucket``; a qualifying pair whose only
     agreeing block lands in an oversized bucket is dropped when its keys salt
     into different sub-buckets. The trade is observable, not silent:
-    ``SALT_METRICS['simhash_pairs']`` records oversized-bucket and affected
-    row counts per call (0 oversized => the pigeonhole guarantee holds
-    exactly)."""
+    the decision ``salt.simhash_pairs`` records oversized-bucket and
+    affected row counts per call (0 oversized => the pigeonhole guarantee
+    holds exactly)."""
     # collapse on the TEXT before hashing: the sketch UDF (the dominant
     # cost) runs once per DISTINCT text, and identical texts star-collapse
     # at hamming 0 exactly as identical sketches would
@@ -328,8 +320,8 @@ def hamming_candidate_pairs(
     this operator — stays a pathological-input backstop instead of the
     common case. Same 100 TB guards as the text LSH family: byte-identical
     sketches collapse to star pairs (hamming 0) before the block join, and
-    residual oversized buckets are salted — ``SALT_METRICS[tag]`` records
-    the (observable) recall trade.
+    residual oversized buckets are salted — the decision ``salt.<tag>``
+    records the (observable) recall trade.
 
     ``collapse_identical=False`` skips the sketch-level star collapse for
     callers that already collapsed upstream on the raw payload (simhash

@@ -35,10 +35,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
 from . import dedup as _dedup
-
-# Last-call iteration stats: {rounds, edges_in, nodes, converged}.
-LAST_CC_STATS: dict[str, int] = {}
 
 
 def _probe_round(edges: DataFrame) -> tuple[bool, int, int]:
@@ -106,10 +104,10 @@ def connected_components(
     INPUT is probed the same way (the job that materializes the input
     checkpoint, subsuming the old count job), so an already-star-forest
     input — e.g. a corpus whose only duplicates are exact-dup stars —
-    finishes with ZERO rounds. Exhausting ``max_iter`` without reaching the
-    fixed point emits a warning and sets ``LAST_CC_STATS['converged'] =
-    False`` (ADVICE r3: labels may be wrong in that case, and the signal
-    must be observable).
+    finishes with ZERO rounds. The decision ``cc`` records rounds,
+    edges_in, nodes and converged; exhausting ``max_iter`` short of the
+    fixed point warns and records ``converged=False`` (ADVICE r3: labels
+    may be wrong then, and the signal must be observable).
     """
     # localCheckpoint per round: each round's plan references the previous
     # round TWICE (the symmetric union), so without lineage truncation the
@@ -192,7 +190,7 @@ def connected_components(
         warnings.warn(
             f"connected_components exhausted max_iter={max_iter} before the "
             "fixed point; component labels may be incorrect "
-            "(LAST_CC_STATS['converged']=False)",
+            "(cache.decision('cc')['converged'] is False)",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -202,9 +200,8 @@ def connected_components(
         .groupBy("node")
         .agg(F.min("component").alias("component"))
     )
-    LAST_CC_STATS.update(
-        rounds=rounds, edges_in=n_in, nodes=nodes, converged=converged
-    )
+    stats = dict(rounds=rounds, edges_in=n_in, nodes=nodes, converged=converged)
+    cache.record("cc", stats)
     return labels
 
 

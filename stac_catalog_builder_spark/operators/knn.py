@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.cells import (
     hex_cell_np,
     hex_cell_udf,
@@ -59,13 +60,6 @@ from ..functions.geo import haversine_col, haversine_np
 
 _OUT_SCHEMA = "query_id string, image_id string, dist_m double"
 _METERS_PER_DEG_LAT = 111194.9  # pi * 6371000 / 180
-
-# Last-call routing stats for knn_join_cellring (observability: how many
-# queries the ring proved complete vs paid the exact fallback scan).
-# "routing" holds an UNEVALUATED one-row frame (n_queries, satisfied,
-# fallback, edge_unsafe): reading it runs its own Spark job, so the
-# operator call itself stays job-free.
-LAST_CELLRING_STATS: dict[str, DataFrame] = {}
 
 
 def _queries_pdf(queries) -> pd.DataFrame:
@@ -227,6 +221,8 @@ def knn_join_cellring(
     the same JVM tail. Results are identical to ``knn_join`` (same oracle).
     The call returns a lazy plan; when every query certifies, the pending
     frame comes back empty at run time and AQE drops the fallback scan.
+    The routing (n_queries, satisfied, fallback, edge_unsafe) is recorded,
+    unevaluated (the call stays job-free), as the decision ``knn.routing``.
 
     ``ring_radius``: a fixed radius for every query, or **None for
     ADAPTIVE per-query radii** derived from exact cell-count statistics
@@ -334,15 +330,13 @@ def knn_join_cellring(
         .withColumn("dist_m", dist),
         k,
     )
-    LAST_CELLRING_STATS["routing"] = (
-        qdim.join(cert.withColumn("ok", F.lit(1)), "query_id", "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            F.count("ok").alias("satisfied"),
-            F.count_if(F.col("ok").isNull()).alias("fallback"),
-            F.count_if(~F.col("safe")).alias("edge_unsafe"),
-        )
+    routing = qdim.join(cert.withColumn("ok", F.lit(1)), "query_id", "left").agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        F.count("ok").alias("satisfied"),
+        F.count_if(F.col("ok").isNull()).alias("fallback"),
+        F.count_if(~F.col("safe")).alias("edge_unsafe"),
     )
+    cache.record("knn.routing", routing)
     return ranked.join(cert, "query_id", "semi").unionByName(fallback)
 
 

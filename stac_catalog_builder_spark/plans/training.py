@@ -70,9 +70,9 @@ def build_training_contexts(
     # feed both the shard sink and the caller's stats counts; without the
     # cache each consumer re-executes decontaminate -> LSH -> connected
     # components — the most expensive lineage in the repo — once per count.
-    # Lifecycle: replaced on the next call, releasable via cache.release()
-    # (build_training_shards releases after its stats). The cache holds the
-    # SURVIVOR set (post-dedup), not the raw corpus, and spills to disk.
+    # Lifecycle: freed on leaving the caller's cache.run() (one wraps
+    # build_training_shards) or by cache.release(). It holds the SURVIVOR
+    # set (post-dedup), not the raw corpus, and spills to disk.
     kept = cache.scoped_persist("training_kept", kept)
     split = leakage_safe_split(
         kept.drop("group_id"),
@@ -136,40 +136,39 @@ def build_training_shards(
 ) -> dict:
     """Run the full corpus -> shards pipeline; returns a stats dict with
     per-stage counts and the shard manifest rows. ``docs`` needs
-    (doc_id, text); ``benchmark`` needs (text)."""
-    contexts, report, kept, train = build_training_contexts(
-        spark,
-        docs,
-        benchmark,
-        decontaminate_n=decontaminate_n,
-        jaccard_threshold=jaccard_threshold,
-        chunk_tokens=chunk_tokens,
-        overlap=overlap,
-        budget=budget,
-        split_weights=split_weights,
-        salt=salt,
-    )
-    manifest = write_webdataset_shards(
-        contexts.withColumn("bytes", F.encode(F.col("text"), "UTF-8")),
-        out_dir,
-        n_shards=n_shards,
-        key_col="context_id",
-        payload_ext="txt",
-        meta_cols=["n_tokens", "n_chunks", "doc_ids"],
-    ).collect()
-    # Stats without re-running the pipeline (VERDICT r5 #1): the sink job
-    # materialized the kept/train caches on its way, so those counts are
-    # cache reads; n_contexts comes straight from the manifest (every
-    # context is exactly one shard member — no job at all). Only the cheap
-    # input/report passes still touch the raw corpus.
-    stats = {
-        "n_docs_in": docs.count(),
-        "n_contaminated": report.where(F.col("doc_id") >= 0).count(),
-        "n_kept": kept.count(),
-        "n_train": train.count(),
-        "n_contexts": sum(m["n_members"] for m in manifest),
-        "shards": manifest,
-    }
-    cache.release("training_kept")
-    cache.release("training_train")
-    return stats
+    (doc_id, text); ``benchmark`` needs (text). Runs in one ``cache.run()``,
+    so every cache the pipeline persists is released on return."""
+    with cache.run():
+        contexts, report, kept, train = build_training_contexts(
+            spark,
+            docs,
+            benchmark,
+            decontaminate_n=decontaminate_n,
+            jaccard_threshold=jaccard_threshold,
+            chunk_tokens=chunk_tokens,
+            overlap=overlap,
+            budget=budget,
+            split_weights=split_weights,
+            salt=salt,
+        )
+        manifest = write_webdataset_shards(
+            contexts.withColumn("bytes", F.encode(F.col("text"), "UTF-8")),
+            out_dir,
+            n_shards=n_shards,
+            key_col="context_id",
+            payload_ext="txt",
+            meta_cols=["n_tokens", "n_chunks", "doc_ids"],
+        ).collect()
+        # Stats without re-running the pipeline (VERDICT r5 #1): the sink job
+        # materialized the kept/train caches on its way, so those counts are
+        # cache reads; n_contexts comes straight from the manifest (every
+        # context is exactly one shard member — no job at all). Only the cheap
+        # input/report passes still touch the raw corpus.
+        return {
+            "n_docs_in": docs.count(),
+            "n_contaminated": report.where(F.col("doc_id") >= 0).count(),
+            "n_kept": kept.count(),
+            "n_train": train.count(),
+            "n_contexts": sum(m["n_members"] for m in manifest),
+            "shards": manifest,
+        }

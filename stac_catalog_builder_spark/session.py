@@ -14,6 +14,7 @@ import re
 from pyspark.sql import SparkSession
 
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+_LOCAL_MASTER = re.compile(r"local\[(\*|\d+)(?:,\d+)?\]")
 _INFER_NTZ_KEY = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 # Configs chosen for a 1000-executor / 100 TB deployment and scaled down for
@@ -70,18 +71,24 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to 2x the local core count — the
-    per-cluster rule is "2x total executor cores", which AQE then coalesces.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` if set, else to
+    spark-submit's ``--master`` (``local[*]`` under plain python). Shuffle
+    partitions default to 2x the cores (``local[N]``, the env var or
+    ``local_cores()``): "2x total executor cores", which AQE coalesces.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
+    env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = int(env_cpus) if env_cpus else local_cores()
+    if master is None and env_cpus:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if not master.startswith("local[") else _parse_local_cores(master, cpus)
-        shuffle_partitions = 2 * n
+        m = _LOCAL_MASTER.fullmatch(master or "")
+        if m is not None:
+            cpus = local_cores() if m[1] == "*" else int(m[1])
+        shuffle_partitions = 2 * cpus
 
-    builder = SparkSession.builder.appName(app).master(master)
+    builder = SparkSession.builder.appName(app)
+    if master is not None:
+        builder = builder.master(master)
     conf = dict(_BASE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
@@ -119,11 +126,6 @@ def read_parquet(spark: SparkSession, path: str):
     return spark.read.schema(schema).parquet(path)
 
 
-def _parse_local_cores(master: str, default: int) -> int:
-    inner = master[len("local[") : -1]
-    if inner == "*":
-        return os.cpu_count() or default
-    try:
-        return int(inner)
-    except ValueError:
-        return default
+def local_cores() -> int:
+    """The CPUs this process may run on (its affinity mask, not the host)."""
+    return len(os.sched_getaffinity(0))

@@ -8,6 +8,7 @@ import pytest
 from conftest import jobs_run_by
 from pyspark.sql import functions as F
 
+from stac_catalog_builder_spark import cache
 from stac_catalog_builder_spark.functions.hashes import (
     char_shingle_hashes,
     hamming64,
@@ -182,43 +183,62 @@ def test_ngram_jaccard_exact_values(spark):
     assert out[(1, 3)] == 0.0
 
 
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_cache_lifecycle_scoped_and_releasable(spark, docs, dup_corpus):
     """VERDICT r2 #6 / ADVICE: operator persists must not accumulate across
     calls and must be fully releasable once results are materialized."""
-    from stac_catalog_builder_spark import cache
-
     cache.release()
     # baseline: earlier tests' localCheckpoint RDDs may still await the
     # async ContextCleaner — assert no NET growth from THIS test's ops, not
     # a global zero (that would race the cleaner)
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = _persistent_rdds(spark)
     dedup.minhash_candidate_pairs(dup_corpus).count()
+    first = _persistent_rdds(spark) - before
     dedup.minhash_candidate_pairs(dup_corpus).count()  # repeat: replaces, not adds
+    second = _persistent_rdds(spark) - before
+    assert len(first) == len(second) == 2 and not first & second, (first, second)
     dedup.simhash_candidate_pairs(dup_corpus).count()
-    tags = cache.live_tags()
-    assert tags == [
-        "minhash_pairs",
-        "minhash_pairs_members",
-        "simhash_pairs",
-        "simhash_pairs_members",
-    ], tags
+    # 4 tags, 3 cached plans: simhash's exact-collapse plan is minhash's, and
+    # Spark keys caches by plan
+    assert len(_persistent_rdds(spark) - before) == 3
     assert cache.release() == 4
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    assert after <= before, after - before
-    assert cache.live_tags() == []
+    assert _persistent_rdds(spark) <= before
+    assert cache.release() == 0
+
+
+def test_run_scope_releases_its_caches_on_exit(spark, docs, dup_corpus):
+    """Leaving ``cache.run()`` releases that run's caches, normally and when
+    the body raises, and leaves the root scope's caches alone."""
+    cache.release()
+    before = _persistent_rdds(spark)
+    dedup.minhash_candidate_pairs(docs).count()  # a root-scope cache pair
+    root = _persistent_rdds(spark) - before
+    with cache.run():
+        dedup.minhash_candidate_pairs(dup_corpus).count()
+        assert len(_persistent_rdds(spark) - before - root) == 2
+    assert _persistent_rdds(spark) - before == root
+    with pytest.raises(RuntimeError, match="body failed"):
+        with cache.run():
+            dedup.simhash_candidate_pairs(dup_corpus).count()
+            assert len(_persistent_rdds(spark) - before - root) == 2
+            raise RuntimeError("body failed")
+    assert _persistent_rdds(spark) - before == root
+    assert cache.release() == 2
+    assert _persistent_rdds(spark) <= before
 
 
 def test_salt_metrics_observable(spark):
     """ADVICE r2 (medium): the recall trade of salting is observable —
-    SALT_METRICS reports oversized buckets; zero oversized => exact."""
-    from stac_catalog_builder_spark import cache
-
+    the ``salt.<tag>`` decision reports oversized buckets; zero oversized
+    => exact. A run scope reads only the decisions recorded inside it."""
     # one hot bucket of 30 keys + 10 singleton buckets
     rows = [(i, 777) for i in range(30)] + [(100 + i, 1000 + i) for i in range(10)]
     bucketed = spark.createDataFrame(rows, "doc_id bigint, bucket bigint")
     salted = dedup._salt_hot_buckets(bucketed, "doc_id", max_bucket=8, tag="t")
-    m = dedup.SALT_METRICS["t"].first().asDict()
+    m = cache.decision("salt.t")
     assert m == {"oversized_buckets": 1, "rows_in_oversized": 30, "max_bucket": 8}
     # hot bucket split into ceil(30/8)=4 sub-buckets; singletons keep salt 0
     sub = salted.where(F.col("bucket") == 777).select("salt").distinct().count()
@@ -228,9 +248,13 @@ def test_salt_metrics_observable(spark):
     )
 
     # generous max_bucket: no salting -> candidate set exact
-    dedup._salt_hot_buckets(bucketed, "doc_id", max_bucket=1000, tag="t")
-    m2 = dedup.SALT_METRICS["t"].first().asDict()
-    assert m2["oversized_buckets"] == 0 and m2["rows_in_oversized"] == 0
+    with cache.run():
+        with pytest.raises(KeyError):
+            cache.decision("salt.t")
+        dedup._salt_hot_buckets(bucketed, "doc_id", max_bucket=1000, tag="t")
+        m2 = cache.decision("salt.t")
+        assert m2["oversized_buckets"] == 0 and m2["rows_in_oversized"] == 0
+    assert cache.decision("salt.t") == m
 
     # operator-level: the metric is always published under the operator tag
     docs = spark.createDataFrame(
@@ -238,14 +262,14 @@ def test_salt_metrics_observable(spark):
         "doc_id bigint, text string",
     )
     dedup.simhash_candidate_pairs(docs).count()
-    assert "simhash_pairs" in dedup.SALT_METRICS
+    assert cache.decision("salt.simhash_pairs")["max_bucket"] == 256
     cache.release()
 
 
 def test_lsh_operators_run_no_job_at_call_time(spark):
     """Calling an LSH operator only builds its plan: the hot-bucket salting
     carries no eager probe, so no Spark job runs until the caller acts."""
-    from stac_catalog_builder_spark import cache, synth
+    from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.session import read_parquet
 
     docs = read_parquet(spark, f"{SF}/documents.parquet").select("doc_id", "text")
@@ -306,9 +330,7 @@ def test_hamming_candidate_pairs_exact_vs_bruteforce(spark):
             ).collect()
         }
         assert got == brute(masked, h), f"max_hamming={h} sketch_bits={bits}"
-        assert dedup.SALT_METRICS[tag].first().asDict()["oversized_buckets"] == 0
-    from stac_catalog_builder_spark import cache
-
+        assert cache.decision(f"salt.{tag}")["oversized_buckets"] == 0
     cache.release()
 
 
@@ -316,7 +338,7 @@ def test_phash_neardup_pairs_finds_reencodes(spark):
     """Image-payload near-dup: bit-flipped phash copies (re-encode
     simulacra) pair with their source at the flip distance; exact phash
     copies star-collapse at hamming 0."""
-    from stac_catalog_builder_spark import cache, synth
+    from stac_catalog_builder_spark import synth
 
     imgs = synth.images(spark, SF).select("image_id", "phash").limit(300)
     twins = imgs.select(

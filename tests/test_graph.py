@@ -9,11 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stac_catalog_builder_spark import cache
-from stac_catalog_builder_spark.operators.graph import (
-    LAST_CC_STATS,
-    connected_components,
-    dedup_groups,
-)
+from stac_catalog_builder_spark.operators.graph import connected_components, dedup_groups
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,9 +47,10 @@ def test_connected_components_matches_union_find(spark, seed, n, m):
         r.node: r.component for r in connected_components(df).collect()
     }
     assert got == want
-    assert LAST_CC_STATS["rounds"] <= 10
-    assert LAST_CC_STATS["converged"] is True
-    assert LAST_CC_STATS["nodes"] == len(nodes)
+    stats = cache.decision("cc")
+    assert stats["rounds"] <= 10
+    assert stats["converged"] is True
+    assert stats["nodes"] == len(nodes)
     cache.release()
 
 
@@ -79,8 +76,8 @@ def test_connected_components_nonconvergence_warns(spark):
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
         connected_components(df, max_iter=1).collect()
-    assert LAST_CC_STATS["converged"] is False
-    assert LAST_CC_STATS["rounds"] == 1
+    assert cache.decision("cc")["converged"] is False
+    assert cache.decision("cc")["rounds"] == 1
     assert any("max_iter" in str(w.message) for w in rec)
     cache.release()
 

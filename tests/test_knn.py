@@ -9,9 +9,8 @@ from conftest import jobs_run_by
 from pyspark.sql import functions as F
 
 import __spark_entry__ as e
-from stac_catalog_builder_spark import synth
+from stac_catalog_builder_spark import cache, synth
 from stac_catalog_builder_spark.functions.cells import hex_cell_udf
-from stac_catalog_builder_spark.operators import knn
 from stac_catalog_builder_spark.operators.knn import knn_join, knn_join_cellring
 
 SF = "/root/testdata/sf0.001"
@@ -114,7 +113,7 @@ def test_cellring_edge_routing_exact(spark):
         )
         pd.testing.assert_frame_equal(got[cols], brute[cols])
         assert (got["dist_m"] - brute["dist_m"]).abs().max() <= 1e-6
-        routing[mode] = knn.LAST_CELLRING_STATS["routing"].first().asDict()
+        routing[mode] = cache.decision("knn.routing")
     # adaptive radii also send the sparse query (inner ring too empty to
     # size a radius) down the edge-unsafe route
     assert routing == {
@@ -138,7 +137,7 @@ def test_cellring_empty_queries(spark):
         )
         assert out.columns == ["query_id", "rank", "image_id", "dist_m"]
         assert out.count() == 0
-        routing = knn.LAST_CELLRING_STATS["routing"].first().asDict()
+        routing = cache.decision("knn.routing")
         assert set(routing.values()) == {0}
 
 

@@ -27,8 +27,9 @@ discipline (/root/reference/tests/test_commandapi.py:20-57):
 - ``minhash_pairs`` — the ENTIRE MinHash-LSH pipeline replayed: exact-dup
   star collapse, 5-gram shingle hashes, all 64 permutations (a*h+b mod
   2^31-1, constants imported from the kernel), the 16 band folds, and the
-  share-a-bucket self-join. Valid whenever SALT_METRICS reports zero
-  oversized buckets (asserted) — then the Spark candidate set is exact;
+  share-a-bucket self-join. Valid whenever the ``salt.minhash_pairs``
+  decision reports zero oversized buckets (asserted) — then the Spark
+  candidate set is exact;
 - ``simhash_pairs`` — the 64-bit SimHash kernel (FNV-style Horner token
   hash with wrap-around uint64 arithmetic, splitmix64 finalizer, per-bit
   sign weights) replayed via HUGEINT mod-2^64 list_reduce folds, with the
@@ -48,7 +49,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as e
-from stac_catalog_builder_spark import oracles
+from stac_catalog_builder_spark import cache, oracles
 
 SF = "/root/testdata/sf0.001"
 
@@ -412,10 +413,8 @@ def test_minhash_pairs_exact_vs_duckdb(spark, con):
     every 5-gram shingle (Horner base 257 mod 2^31-1), applies all 64
     permutations, folds 16 band keys, and self-joins on shared buckets —
     star pairs ride along. Exactness of the Spark side's candidate set
-    requires zero salted buckets, which SALT_METRICS certifies (asserted
+    requires zero salted buckets, which the salt decision certifies (asserted
     below); given that, the two engines must emit the SAME pair set."""
-    from stac_catalog_builder_spark.operators.dedup import SALT_METRICS
-
     sql = f"""
 WITH {_minhash_cte_chain().strip()}
 SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b FROM rep_pairs
@@ -425,7 +424,7 @@ SELECT id_a, id_b FROM star
     out = e.q_minhash_pairs(spark, SF)
     _assert_parity(out, con, sql)
     # the exactness precondition: no bucket was salted on this corpus
-    assert SALT_METRICS["minhash_pairs"].first().asDict()["oversized_buckets"] == 0
+    assert cache.decision("salt.minhash_pairs")["oversized_buckets"] == 0
     # star pairs alone would be exactly one per doc; LSH must add more
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert out.count() > n_docs
@@ -479,8 +478,6 @@ def test_dedup_groups_exact_vs_duckdb(spark, con):
     engine certifies candidates, verification, the large-star/small-star CC
     rounds, AND the star-contraction soundness argument (reps are group
     minima, so component minima survive contraction) in one comparison."""
-    from stac_catalog_builder_spark.operators.dedup import SALT_METRICS
-
     sql = f"""
 WITH RECURSIVE {_dedup_groups_ctes().strip()}
 SELECT cp.doc_id,
@@ -490,7 +487,7 @@ FROM corpus cp LEFT JOIN all_lab al ON al.node = cp.doc_id
 """
     out = e.q_dedup_groups(spark, SF)
     _assert_parity(out, con, sql)
-    assert SALT_METRICS["minhash_pairs"].first().asDict()["oversized_buckets"] == 0
+    assert cache.decision("salt.minhash_pairs")["oversized_buckets"] == 0
     # the doubled corpus guarantees real near-dup groups: every original
     # doc must share its group with its +1e6 twin and not be kept twice
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
@@ -511,8 +508,6 @@ def test_simhash_pairs_exact_vs_duckdb(spark, con):
         _SPLITMIX_C2,
         _SPLITMIX_C3,
     )
-    from stac_catalog_builder_spark.operators.dedup import SALT_METRICS
-
     W = 1 << 64
     FNV_OFFSET = 1469598103934665603
     FNV_BASE = 1099511628211
@@ -582,7 +577,7 @@ SELECT id_a, id_b, CAST(0 AS INT) FROM star
 """
     out = e.q_simhash_pairs(spark, SF)
     _assert_parity(out, con, sql)
-    assert SALT_METRICS["simhash_pairs"].first().asDict()["oversized_buckets"] == 0
+    assert cache.decision("salt.simhash_pairs")["oversized_buckets"] == 0
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert out.count() > n_docs
 
