@@ -2,8 +2,10 @@
 
 Replaces the reference's hand-rolled concurrency knobs (100-thread metadata
 pool at stacbuilder/collector.py:227-228, async save pools at
-stacbuilder/async_utils.py:35-56) with Spark's scheduler + AQE: the only
-tuning surface is cores, shuffle partitions and adaptive execution.
+stacbuilder/async_utils.py:35-56) with Spark's scheduler + AQE. The tuning
+surface is cores, shuffle partitions and adaptive execution, plus the
+compile budget: a generated-code cache that holds the engine's whole plan set
+and JVM options that keep HotSpot's optimizing compiler (C2) for hot loops.
 """
 
 from __future__ import annotations
@@ -16,6 +18,38 @@ from pyspark.sql import SparkSession
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 _LOCAL_MASTER = re.compile(r"local\[(\*|\d+)(?:,\d+)?\]")
 _INFER_NTZ_KEY = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+# JVM options for the driver and every executor (they must be set before the
+# JVM launches: the driver's for local mode, the executors' for a cluster).
+_JAVA_OPTS = " ".join(
+    [
+        # Whole-stage codegen fuses scan+join+refine+projection into one Java
+        # method; complex spatial expressions push it past HotSpot's
+        # 8000-bytecode JIT refusal threshold (DontCompileHugeMethods),
+        # leaving the hot loop in the bytecode INTERPRETER: measured 9x slower
+        # and anti-scaling with cores on this engine's PIP+tiling plan.
+        # Lifting the cap restores JIT. Per-method and independent of scale;
+        # drop it only if Spark stops fusing stages into huge methods.
+        "-XX:-DontCompileHugeMethods",
+        # C2 thresholds at 10x the JDK 17 defaults (5000 / 600 / 15000 /
+        # 40000). On a 4-core host C2 took 27-29 of a cold perfbench pass's
+        # 58-67 cpu-s, mostly on Catalyst, planner and py4j code that a short
+        # job runs only a few thousand times; with these it takes 10-15 and
+        # the pass 46-57. A per-row loop in a task still crosses 400k
+        # back-edges in well under a second, so hot loops still reach C2,
+        # only later: the cold pass's wall rose 5-7%. Safe at 1000 executors:
+        # tasks there are longer, so their loops reach C2 as before, and the
+        # flags only keep C2 off code too cold to repay it. Fully C1
+        # (-XX:TieredStopAtLevel=1) halved cold CPU but doubled warm task
+        # CPU, so it was rejected. Drop these where first-pass wall time
+        # matters more than CPU, or on a JDK whose defaults differ.
+        "-XX:Tier4InvocationThreshold=50000",
+        "-XX:Tier4MinInvocationThreshold=6000",
+        "-XX:Tier4CompileThreshold=150000",
+        "-XX:Tier4BackEdgeThreshold=400000",
+        os.environ.get("SPARK_GRAFT_JAVA_OPTS", ""),
+    ]
+).strip()
 
 # Configs chosen for a 1000-executor / 100 TB deployment and scaled down for
 # local[N] tests: AQE re-plans shuffles at runtime (coalesce tiny partitions,
@@ -45,21 +79,19 @@ _BASE_CONF = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    # Whole-stage codegen fuses scan+join+refine+projection into one Java
-    # method; complex spatial expressions push it past HotSpot's 8000-bytecode
-    # JIT refusal threshold (DontCompileHugeMethods), leaving the hot loop in
-    # the bytecode INTERPRETER: measured 9x slower and anti-scaling with
-    # cores on this engine's PIP+tiling plan. Lifting the cap restores JIT.
-    # (Must be set before JVM launch — driver for local mode, executors for
-    # cluster mode.)
-    "spark.driver.extraJavaOptions": (
-        "-XX:-DontCompileHugeMethods "
-        + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
-    ).strip(),
-    "spark.executor.extraJavaOptions": (
-        "-XX:-DontCompileHugeMethods "
-        + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
-    ).strip(),
+    # Spark's generated-class cache (a static conf, read at JVM start). The
+    # default of 100 entries is smaller than the engine's plan set (one
+    # text_curation perfbench pass generates ~170 distinct sources, one
+    # bench.py suite pass 537), so every repeated query compiled again in
+    # Janino and was JIT-compiled again: 165 compiles per warm text_curation
+    # pass, 27 per catalog_build pass; 0-2 with 2000 (~3.7x the suite). A
+    # generated class averages 2.9 kB of bytecode, so a full cache holds
+    # ~6 MB per JVM, at any cluster size: it is as safe on 1000
+    # executors as on local[4]. Drop it once Spark's default exceeds the
+    # engine's plan set.
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    "spark.driver.extraJavaOptions": _JAVA_OPTS,
+    "spark.executor.extraJavaOptions": _JAVA_OPTS,
 }
 
 
