@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from stac_catalog_builder_spark import oracles, synth
-from stac_catalog_builder_spark.session import read_parquet
+from stac_catalog_builder_spark.session import local_frame, read_parquet
 from stac_catalog_builder_spark.functions.cells import grid_cell_col
 from stac_catalog_builder_spark.operators import dedup, sampling, similarity, textops
 from stac_catalog_builder_spark.operators.footprints import with_footprint
@@ -808,7 +808,8 @@ def q_spatial_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     polys = synth.boundary_polygons(sf_dir)
-    pdf = spark.createDataFrame(
+    pdf = local_frame(
+        spark,
         [
             (p["tile_id"], p["collection_id"],
              [float(x) for x in p["ring_x"]], [float(y) for y in p["ring_y"]])

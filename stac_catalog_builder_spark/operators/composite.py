@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.codecs import decode_image, encode_raw
+from ..session import local_frame
 
 PX_MICRO = 10  # pixel pitch on the micro-degree lattice (see module doc)
 
@@ -438,8 +439,8 @@ def rasterize_polygons(
         ys = int(np.floor((vy.min() + 90.0) * 40000.0 + 0.5))
         yn = int(np.floor((vy.max() + 90.0) * 40000.0 + 0.5))
         rows.append((i, str(p[label_col]), xw, xe, ys, yn))
-    poly_df = spark.createDataFrame(
-        rows, "poly_idx int, label string, xw bigint, xe bigint, ys bigint, yn bigint"
+    poly_df = local_frame(
+        spark, rows, "poly_idx int, label string, xw bigint, xe bigint, ys bigint, yn bigint"
     )
     # The paint kernel costs ~1000x its input bytes per row, so AQE's
     # byte-driven coalescing of a column repartition would collapse the

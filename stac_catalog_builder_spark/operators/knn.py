@@ -57,6 +57,7 @@ from ..functions.cells import (
     hex_size,
 )
 from ..functions.geo import haversine_col, haversine_np
+from ..session import local_frame
 
 _OUT_SCHEMA = "query_id string, image_id string, dist_m double"
 _METERS_PER_DEG_LAT = 111194.9  # pi * 6371000 / 180
@@ -163,9 +164,8 @@ def _adaptive_radii(
         for qc in q_cells
         for c in hex_kring_np(int(qc), r_inner_max)
     }
-    # Arrow path (pandas), not a python tuple list: createDataFrame over
-    # py4j pickles row-by-row — measurable at 10^4+ rows per call
-    inner_df = spark.createDataFrame(
+    inner_df = local_frame(
+        spark,
         pd.DataFrame({"cell": np.fromiter(sorted(inner), dtype=np.int64)}),
         "cell bigint",
     )
@@ -292,15 +292,15 @@ def knn_join_cellring(
         ring = hex_kring_np(int(q_cells[i]), int(radii[i]))
         qid_chunks.append(np.full(len(ring), qid, dtype=object))
         cell_chunks.append(ring.astype(np.int64))
-    # Arrow path: a python tuple list here costs a py4j pickle per ring cell
-    # (10^4-10^5 rows per call in adaptive mode)
-    ring_df = spark.createDataFrame(
+    ring_df = local_frame(
+        spark,
         pd.DataFrame(
             {"query_id": np.concatenate(qid_chunks), "cell": np.concatenate(cell_chunks)}
         ),
         "query_id string, cell bigint",
     )
-    qdim = spark.createDataFrame(
+    qdim = local_frame(
+        spark,
         queries_pdf.assign(bound_m=bound_m, safe=~edge_unsafe),
         "query_id string, qlon double, qlat double, bound_m double, safe boolean",
     )

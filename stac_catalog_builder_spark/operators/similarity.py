@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashes import hyperplane_sketch
+from ..session import local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -120,7 +121,8 @@ def cosine_topk(
     if qpdf.empty:
         # np.stack on zero queries raises; return an empty result with the
         # output schema instead (parity with the join-based formulation)
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [],
             f"query_id {qid_type}, rank int, neighbor_id {nid_type}, cosine double",
         )

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 P_BITS = 12
 M_REG = 1 << P_BITS  # 4096 registers -> ~1.04/sqrt(m) = 1.6% std error
 RHO_MAX = 33  # leading-zero rank of a 32-bit lane, +1, w=0 -> 33
@@ -562,9 +564,7 @@ def hist_quantiles(
             )
         ).alias("n"),
     )
-    qdf = registers.sparkSession.createDataFrame(
-        [(q,) for q in qs], "q_e6 bigint"
-    )
+    qdf = local_frame(registers.sparkSession, [(q,) for q in qs], "q_e6 bigint")
     target = F.greatest(
         F.lit(1).cast("bigint"),
         F.expr("(n * q_e6 + 999999) div 1000000"),

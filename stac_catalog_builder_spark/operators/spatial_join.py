@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import grid_bounds_np, grid_cell_col, grid_cover_bbox
 from ..functions.geo import point_in_polygon_np, polygon_bounds
+from ..session import local_frame
 
 DEFAULT_COVER_RES = 7  # ~1.4-degree cells. Higher res = more cover rows
 # (still dimension-sized) but a smaller boundary fraction: only images in
@@ -150,10 +151,10 @@ def prepare_polygon_dim(
             }
         )
     return {
-        "cover_df": spark.createDataFrame(
-            cover_rows, schema="cover_cell bigint, poly_idx int, is_full boolean"
+        "cover_df": local_frame(
+            spark, cover_rows, "cover_cell bigint, poly_idx int, is_full boolean"
         ),
-        "meta_df": spark.createDataFrame(pd.DataFrame(meta_rows)),
+        "meta_df": local_frame(spark, pd.DataFrame(meta_rows)),
         "max_v": max(len(m["ring_x"]) for m in meta_rows),
         "cover_res": cover_res,
     }

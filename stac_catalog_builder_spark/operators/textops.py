@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # keyword groups for the n-gram language heuristic: occurrence counts of
 # language-marker tokens decide the label (deterministic tiebreak by order).
 LANG_MARKERS: dict[str, list[str]] = {
@@ -337,7 +339,7 @@ def bm25_topk(
         raise ValueError(f"k must be >= 1: {k}")
     spark = df.sparkSession
     postings = inverted_postings(df, doc_col=doc_col, text_col=text_col, min_df=min_df)
-    qt = spark.createDataFrame([(t,) for t in set(query_terms)], "term string")
+    qt = local_frame(spark, [(t,) for t in set(query_terms)], "term string")
     hits = postings.join(F.broadcast(qt), "term")
     lens = df.select(
         F.col(doc_col).alias("doc_id"),

@@ -158,6 +158,46 @@ def read_parquet(spark: SparkSession, path: str):
     return spark.read.schema(schema).parquet(path)
 
 
+def local_frame(spark: SparkSession, rows, schema=None):
+    """A driver-built DataFrame as one JVM ``LocalRelation``.
+
+    ``rows`` is a sequence of row tuples or a pandas frame (whose columns
+    map to ``schema`` by position); ``schema`` is a ``StructType`` or a DDL
+    string, and may be omitted only for a pandas frame (then Arrow infers
+    it, as Spark's own pandas path does). The data always goes to the JVM
+    as one ``pyarrow.Table``. ``spark.createDataFrame`` over a tuple list
+    plans a pickled ``LogicalRDD`` instead, and so does its pandas path
+    for an empty frame or with ``spark.sql.execution.arrow.pyspark.enabled``
+    off; every job over such a frame starts Python workers, although the
+    plan runs no Python code. This is the engine's only
+    ``createDataFrame`` call (``tests/test_session.py`` guards that)."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if isinstance(rows, pd.DataFrame) and schema is None:
+        table = pa.Table.from_pandas(rows, preserve_index=False)
+        return spark.createDataFrame(table, from_arrow_schema(table.schema))
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(schema, StructType):
+        raise TypeError(f"schema must be a StructType or a DDL string: {schema!r}")
+    arrow_schema = to_arrow_schema(schema)
+    from_pandas = isinstance(rows, pd.DataFrame)
+    if from_pandas:
+        cols = [rows.iloc[:, i] for i in range(rows.shape[1])]
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    if len(cols) != len(arrow_schema):
+        raise ValueError(f"{len(cols)} columns for a {len(arrow_schema)}-field schema")
+    arrays = [
+        pa.array(c, type=f.type, from_pandas=from_pandas)
+        for c, f in zip(cols, arrow_schema)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def local_cores() -> int:
     """The CPUs this process may run on (its affinity mask, not the host)."""
     return len(os.sched_getaffinity(0))

@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 
 def _dynamic_overwrite(
     df: DataFrame, path: Path, part_col: str, cluster: bool = True
@@ -236,7 +238,8 @@ class SnapshotStore:
         ]
         mrows = [(k, counts[k]) for k in new_keys + refreshed]
         if mrows:
-            metrics_df = spark.createDataFrame(
+            metrics_df = local_frame(
+                spark,
                 [(k, n, stage) for k, n in mrows],
                 "part_key string, n_rows bigint, stage string",
             )
@@ -247,8 +250,8 @@ class SnapshotStore:
         if new_keys:
             # 4. lineage last = commit marker (also an idempotent upsert;
             #    refreshed keys are already committed — no new marker needed)
-            lineage_df = spark.createDataFrame(
-                [(k, stage) for k in new_keys], "part_key string, stage string"
+            lineage_df = local_frame(
+                spark, [(k, stage) for k in new_keys], "part_key string, stage string"
             )
             _dynamic_overwrite(
                 lineage_df, self._lineage_path(stage), "part_key", cluster=False

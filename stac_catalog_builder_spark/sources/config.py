@@ -21,6 +21,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 DEFAULT_CONFIG_PATH = Path(__file__).resolve().parent.parent / "data" / "collection-config.json"
 
 BAND_STRUCT = T.StructType(
@@ -73,4 +75,4 @@ def asset_config_df(spark: SparkSession, cfg: dict) -> DataFrame:
                 bands,
             )
         )
-    return spark.createDataFrame(rows, ASSET_CONFIG_SCHEMA)
+    return local_frame(spark, rows, ASSET_CONFIG_SCHEMA)

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.geo import rect_ring
-from .session import read_parquet
+from .session import local_frame, read_parquet
 
 # --- shared constants (mirrored in oracles.py SQL and numpy fixtures) ---
 A_LON = 2654435761  # Knuth's multiplicative hash constant
@@ -231,7 +231,8 @@ def boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark analogue of the reference's item→collection association
     (builder.py:470-475). Tiny (25 rows): always broadcast.
     """
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _boundary_rows(sf_dir),
         "tile_id string, collection_id string, bbox_w double, bbox_s double, "
         "bbox_e double, bbox_n double",
@@ -258,6 +259,6 @@ def knn_query_points(sf_dir: str) -> pd.DataFrame:
 
 def knn_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``knn_query_points`` as a Spark DataFrame."""
-    return spark.createDataFrame(
-        knn_query_points(sf_dir), "query_id string, qlon double, qlat double"
+    return local_frame(
+        spark, knn_query_points(sf_dir), "query_id string, qlon double, qlat double"
     )

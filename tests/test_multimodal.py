@@ -25,7 +25,8 @@ def images_small(spark):
 def encoded(images_small):
     df = multimodal.with_encoded_bytes(images_small)
     df.cache().count()
-    return df
+    yield df
+    df.unpersist()
 
 
 def test_encoded_bytes_schema(encoded):

@@ -229,3 +229,30 @@ def test_minhash_self_join_keys_on_bucket_and_salt(spark):
     for line in plan.splitlines():
         if "Window" in line:
             assert "bucket" not in line, line
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_pip_join_and_resume_plans_read_no_python_rdd(spark, tmp_path):
+    """A driver-built dimension (the PIP cover and polygon tables, the
+    checkpoint's metrics and lineage upserts) is a JVM LocalRelation, not a
+    pickled LogicalRDD: a job over a LogicalRDD starts Python workers though
+    the plan runs no Python code."""
+    from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
+    from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
+
+    assigned = spatial_join_pip(
+        e._images_fp(spark, SF), polygons=synth.boundary_polygons(SF)
+    )
+    plan = _optimized(assigned)
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+    store = SnapshotStore(tmp_path / "ckpt")
+    tiles = synth.boundaries(spark, SF)
+    store.write_stage(tiles, "tiles", "collection_id")
+    todo = store.pending(tiles, spark, "tiles", "collection_id")
+    plan = _optimized(todo)
+    assert "LogicalRDD" not in plan, plan
+    assert todo.count() == 0

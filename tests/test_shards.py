@@ -22,9 +22,11 @@ META = ["caption", "fmt", "w", "h"]
 
 @pytest.fixture(scope="module")
 def images(spark):
-    return with_encoded_bytes(
+    df = with_encoded_bytes(
         synth.images(spark, SF).where(F.col("img_key") < 400)
     ).cache()
+    yield df
+    df.unpersist()
 
 
 def _write(images, out):

@@ -46,7 +46,9 @@ def test_fmix32_matches_numpy_reference(spark):
 def assigned(spark):
     import __spark_entry__ as e
 
-    return e._assigned(spark, SF).select("collection_id", "tile_id", "phash").cache()
+    df = e._assigned(spark, SF).select("collection_id", "tile_id", "phash").cache()
+    yield df
+    df.unpersist()
 
 
 def test_merge_rollup_equals_direct(spark, assigned):
@@ -226,9 +228,11 @@ QS = [250_000, 500_000, 900_000, 990_000]
 def caplen(spark):
     from stac_catalog_builder_spark import synth
 
-    return synth.images(spark, SF).select(
+    df = synth.images(spark, SF).select(
         "asset_type", F.length("caption").alias("v")
     ).cache()
+    yield df
+    df.unpersist()
 
 
 def test_hist_bracket_contains_true_quantile(spark, caplen):
@@ -322,7 +326,9 @@ def two_corpora(spark):
     b = spark.range(500, 1500).select(F.lit("B").alias("g"), F.col("id").alias("k"))
     dups = spark.range(0, 300).select(F.lit("A").alias("g"), F.col("id").alias("k"))
     nulls = spark.createDataFrame([("A", None), ("B", None)], "g string, k long")
-    return a.unionAll(b).unionAll(dups).unionAll(nulls).cache()
+    df = a.unionAll(b).unionAll(dups).unionAll(nulls).cache()
+    yield df
+    df.unpersist()
 
 
 def test_kmv_exact_branch(spark, two_corpora):
