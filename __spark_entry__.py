@@ -819,7 +819,8 @@ def q_spatial_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ring_y array<double>",
     )
     imgs = _images_fp(spark, sf_dir).select("image_id", "lon", "lat")
-    return spatial_join_pip_partitioned(imgs, pdf).select(
+    max_v = max(len(p["ring_x"]) for p in polys)
+    return spatial_join_pip_partitioned(imgs, pdf, max_vertices=max_v).select(
         "image_id", F.col("poly_id").alias("tile_id"), "collection_id"
     )
 

@@ -93,7 +93,9 @@ def _exact_collapse(
     # persist the collapse output: it feeds both reps (-> the signature
     # table) and star (-> the result union). Measured at 4 cores, a
     # minhash + simhash + dedup_groups pass without this cache costs about
-    # 2 cpu-s more (3 of 3 alternating rounds)
+    # 2 cpu-s more (3 of 3 alternating rounds). The scope keeps one cache
+    # per plan: a repeat call, or another tag collapsing the same payload,
+    # reads this cache instead of rebuilding it
     members = cache.scoped_persist(f"{tag}_members", hashed.join(reps_key, "_ch"))
     star = members.where(F.col(key_col) != F.col("_rep")).select(
         F.col("_rep").alias("id_a"), F.col(key_col).alias("id_b")
@@ -160,8 +162,9 @@ def minhash_candidate_parts(
     # plan — without it Catalyst pushes the explode's inferred
     # ``size(band_keys) > 0`` filter below the collapse join and the
     # band-key UDF is evaluated in several subtrees (at sf0.01 it then
-    # processes 4x the rows). Lifecycle: scoped_persist replaces the
-    # previous call's cache; cache.release() frees it.
+    # processes 4x the rows). Lifecycle: a repeat call on the same corpus
+    # (dedup_groups after minhash pairs) reuses the live cache, a call on
+    # another corpus replaces it; cache.release() frees it.
     b = cache.scoped_persist(
         "minhash_pairs",
         with_minhash(reps, text_col, bands).select(

@@ -213,6 +213,8 @@ def spatial_join_pip_partitioned(
     lon_col: str = "lon",
     lat_col: str = "lat",
     poly_id_col: str = "poly_id",
+    *,
+    max_vertices: int,
 ) -> DataFrame:
     """PIP join for polygon sets TOO LARGE TO BROADCAST (the 100 TB shape
     when the dimension itself is big: cadastral parcels, admin boundaries,
@@ -228,6 +230,10 @@ def spatial_join_pip_partitioned(
        vertex payloads never ride the wide cover table);
     4. boundary-cell candidates refine with the same statically-unrolled JVM
        ray cast; interior cells skip it.
+
+    ``max_vertices`` is the ray cast's unroll width: any upper bound on the
+    ring length the caller already knows (the cast reads edge slots past a
+    ring's end as NULL), so the call runs no Spark job.
 
     Output = ``images`` columns + the polygon table's non-ring columns.
     Results are EXACTLY ``spatial_join_pip``'s (pytest-asserted on the same
@@ -256,16 +262,6 @@ def spatial_join_pip_partitioned(
         cover_gen,
         schema=f"cover_cell bigint, {poly_id_col} {pid_type}, is_full boolean",
     )
-    # exact unroll width for the JVM ray cast: one cheap pass over the
-    # POLYGON table (dimension-sized relative to the fact side)
-    max_v = polygons_df.agg(F.max(F.size("ring_x"))).first()[0]
-    if max_v is None:
-        # empty polygon table: the equi-joins below already produce zero
-        # rows with the correct joined schema — only the NULL unroll width
-        # would crash (ADVICE r3). Any valid width works; no row reaches
-        # the ray cast.
-        max_v = 3
-
     meta = polygons_df  # rings + id + payload columns
     candidates = (
         images.withColumn(
@@ -278,7 +274,7 @@ def spatial_join_pip_partitioned(
         F.when(F.col("is_full"), F.lit(True)).otherwise(
             ray_cast_col(
                 F.col(lon_col), F.col(lat_col), F.col("ring_x"), F.col("ring_y"),
-                max_vertices=int(max_v),
+                max_vertices=max_vertices,
             )
         )
     )

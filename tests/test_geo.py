@@ -219,9 +219,8 @@ def test_with_lonlat_bbox_from_projected_spark(spark):
 
 
 def test_partitioned_pip_empty_and_bad_schema(spark):
-    """ADVICE r3: an empty polygon table short-circuits to an empty result
-    (the NULL max-vertex width must not raise), and a missing ring schema
-    raises ValueError even under ``python -O``."""
+    """ADVICE r3: an empty polygon table short-circuits to an empty result,
+    and a missing ring schema raises ValueError even under ``python -O``."""
     import pytest as _pytest
 
     from stac_catalog_builder_spark import synth
@@ -235,13 +234,37 @@ def test_partitioned_pip_empty_and_bad_schema(spark):
     empty = spark.createDataFrame(
         [], "poly_id string, ring_x array<double>, ring_y array<double>"
     )
-    out = spatial_join_pip_partitioned(images, empty)
+    out = spatial_join_pip_partitioned(images, empty, max_vertices=3)
     assert out.count() == 0
     assert {"image_id", "lon", "lat", "poly_id"} <= set(out.columns)
 
     bad = spark.createDataFrame([("p", [1.0])], "poly_id string, ring_x array<float>")
     with _pytest.raises(ValueError, match="ring_x"):
-        spatial_join_pip_partitioned(images, bad)
+        spatial_join_pip_partitioned(images, bad, max_vertices=3)
+
+
+def test_partitioned_pip_runs_no_job_at_call_time(spark):
+    """The caller passes the ray cast's unroll width, so building the
+    partitioned PIP plan runs no Spark job."""
+    from conftest import SF0001, jobs_run_by
+
+    from stac_catalog_builder_spark import synth
+    from stac_catalog_builder_spark.operators.footprints import with_footprint
+    from stac_catalog_builder_spark.operators.spatial_join import (
+        spatial_join_pip_partitioned,
+    )
+
+    images = with_footprint(synth.images(spark, SF0001)).select("image_id", "lon", "lat")
+    polys = spark.createDataFrame(
+        [("p", [0.0, 1.0, 1.0, 0.0], [0.0, 0.0, 1.0, 1.0])],
+        "poly_id string, ring_x array<double>, ring_y array<double>",
+    )
+    _, jobs = jobs_run_by(
+        spark,
+        "pip-partitioned-plan",
+        lambda: spatial_join_pip_partitioned(images, polys, max_vertices=4),
+    )
+    assert jobs == []
 
 
 def test_partitioned_pip_matches_broadcast(spark):
@@ -273,13 +296,16 @@ def test_partitioned_pip_matches_broadcast(spark):
             ],
             "poly_id string, ring_x array<double>, ring_y array<double>",
         )
-        part = (
-            spatial_join_pip_partitioned(images, pdf)
-            .select("image_id", "poly_id")
-            .toPandas()
-            .sort_values(["image_id", "poly_id"])
-            .reset_index(drop=True)
-        )
+
+        def part(max_vertices):
+            return (
+                spatial_join_pip_partitioned(images, pdf, max_vertices=max_vertices)
+                .select("image_id", "poly_id")
+                .toPandas()
+                .sort_values(["image_id", "poly_id"])
+                .reset_index(drop=True)
+            )
+
         bcast = (
             spatial_join_pip(images, polys, keep_cols=("poly_id",))
             .select("image_id", "poly_id")
@@ -288,7 +314,10 @@ def test_partitioned_pip_matches_broadcast(spark):
             .reset_index(drop=True)
         )
         assert len(bcast) > 0
-        pd.testing.assert_frame_equal(part, bcast)
+        # the exact ring length and a loose upper bound give the same rows
+        max_v = max(len(p["ring_x"]) for p in polys)
+        pd.testing.assert_frame_equal(part(max_v), bcast)
+        pd.testing.assert_frame_equal(part(max_v + 5), bcast)
 
     # fixture rectangles
     run_both(
