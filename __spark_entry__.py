@@ -42,14 +42,19 @@ def _micro(col: str) -> F.Column:
     return F.floor(F.col(col) * 100000.0 + F.lit(0.5)).cast("bigint")
 
 
-def _images_fp(spark: SparkSession, sf_dir: str, fan_out: bool = False) -> DataFrame:
-    # fan_out stays OFF for the JVM-only pipelines (measured, r6): the
+def _ext_micro() -> list[F.Column]:
+    """The four extent bounds as micro-degree BIGINTs ``ext_*_u``."""
+    return [_micro(c).alias(f"{c}_u") for c in ("ext_w", "ext_s", "ext_e", "ext_n")]
+
+
+def _images_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # synth.images' fan_out stays off for the JVM-only pipelines (r6): the
     # single-row-group scan does serialize the first map stage, but at this
     # table width the repartition round trip costs more than the serial
     # projection it parallelizes (interleaved A/B: cell_assign 0.43->0.56,
     # knn 0.85->0.98, hll 3.0->3.8). Python-kernel consumers are the
     # exception — with_encoded_bytes fans out internally (10.5s -> 1.5s).
-    return with_footprint(synth.images(spark, sf_dir, fan_out=fan_out))
+    return with_footprint(synth.images(spark, sf_dir))
 
 
 def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,10 +118,7 @@ def q_extent_by_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ext.select(
         "collection_id",
         F.col("n_assets"),
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        *_ext_micro(),
         F.unix_timestamp("dt_min").alias("dt_min_s"),
         F.unix_timestamp("dt_max").alias("dt_max_s"),
     )
@@ -128,10 +130,7 @@ def q_extent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "collection_id",
         "year",
         "n_assets",
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        *_ext_micro(),
     )
 
 
@@ -141,10 +140,7 @@ def q_item_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "item_id",
         "n_assets",
         "n_types",
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        *_ext_micro(),
         F.unix_timestamp("dt_min").alias("dt_min_s"),
     )
 
@@ -267,10 +263,7 @@ def q_salted_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ext.select(
         "collection_id",
         "n_assets",
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        *_ext_micro(),
         F.unix_timestamp("dt_min").alias("dt_min_s"),
         F.unix_timestamp("dt_max").alias("dt_max_s"),
     )
@@ -914,7 +907,7 @@ def q_image_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: decode -> block-mean embedding -> cosine top-3 neighbors
     for 10 probe images (the image-side ANN pipeline end-to-end)."""
     imgs = multimodal.with_encoded_bytes(
-        _images_fp(spark, sf_dir, fan_out=False).limit(300)
+        _images_fp(spark, sf_dir).limit(300)
     )
     emb = multimodal.image_embedding(imgs).withColumnRenamed("image_id", "vec_id")
     qs = emb.where(F.col("vec_id") < F.lit("img_00000020")).select(

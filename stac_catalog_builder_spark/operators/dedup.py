@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,6 +34,7 @@ from ..functions.hashes import (
     batch_simhash64,
     hyperplane_sketch,
 )
+from .similarity import cosine_col
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
@@ -134,6 +135,36 @@ def _salt_hot_buckets(
     return bucketed.join(over, "bucket", "left").withColumn("salt", salt).drop("_bn")
 
 
+def _bucket_pairs(
+    table: DataFrame, key_col: str, max_bucket: int, tag: str, *score: Column
+) -> DataFrame:
+    """The guarded LSH self-join shared by every pair operator:
+    ``(key, bucket, ...)`` -> ``(id_a, id_b, *score)`` with id_a < id_b.
+
+    ``table`` is persisted under ``tag`` BEFORE salting: the bucket-size
+    aggregate and both self-join sides read it, so the UDF or explode that
+    built it is not run again for each of those subtrees. Without the fence
+    Catalyst also pushes inferred filters (an explode's ``size(..) > 0``)
+    below the collapse join and evaluates the UDF in several subtrees (the
+    minhash band-key UDF then processed 4x the rows at sf0.01). A repeat
+    call on the same input reuses the live cache (one cache per plan), a
+    call on another input replaces it; ``cache.release()`` frees it.
+    ``score`` columns read the two sides as ``l.<col>`` / ``r.<col>``."""
+    b = _salt_hot_buckets(
+        cache.scoped_persist(tag, table), key_col, max_bucket, tag=tag
+    )
+    return (
+        b.alias("l")
+        .join(b.alias("r"), ["bucket", "salt"])
+        .where(F.col(f"l.{key_col}") < F.col(f"r.{key_col}"))
+        .select(
+            F.col(f"l.{key_col}").alias("id_a"),
+            F.col(f"r.{key_col}").alias("id_b"),
+            *score,
+        )
+    )
+
+
 def minhash_candidate_parts(
     df: DataFrame,
     key_col: str = "doc_id",
@@ -157,31 +188,12 @@ def minhash_candidate_parts(
     reps, star = _exact_collapse(
         df.select(key_col, text_col), key_col, text_col, tag="minhash_pairs"
     )
-    # persist the PRE-salt (key, bucket) signature table: it feeds the
-    # bucket-size aggregate and both self-join sides, and it fences the
-    # plan — without it Catalyst pushes the explode's inferred
-    # ``size(band_keys) > 0`` filter below the collapse join and the
-    # band-key UDF is evaluated in several subtrees (at sf0.01 it then
-    # processes 4x the rows). Lifecycle: a repeat call on the same corpus
-    # (dedup_groups after minhash pairs) reuses the live cache, a call on
-    # another corpus replaces it; cache.release() frees it.
-    b = cache.scoped_persist(
-        "minhash_pairs",
-        with_minhash(reps, text_col, bands).select(
-            key_col, F.explode("band_keys").alias("bucket")
-        ),
+    table = with_minhash(reps, text_col, bands).select(
+        key_col, F.explode("band_keys").alias("bucket")
     )
-    b = _salt_hot_buckets(b, key_col, max_bucket, tag="minhash_pairs")
-    left = b.alias("l")
-    right = b.alias("r")
-    rep_pairs = (
-        left.join(right, ["bucket", "salt"])
-        .where(F.col(f"l.{key_col}") < F.col(f"r.{key_col}"))
-        .select(
-            F.col(f"l.{key_col}").alias("id_a"), F.col(f"r.{key_col}").alias("id_b")
-        )
-        .distinct()  # docs sharing several bands; star pairs are unique already
-    )
+    rep_pairs = _bucket_pairs(
+        table, key_col, max_bucket, "minhash_pairs"
+    ).distinct()  # docs sharing several bands; star pairs are unique already
     return reps, rep_pairs, star
 
 
@@ -406,22 +418,11 @@ def hamming_candidate_pairs(
         sketch_col,
         F.explode(F.array(*keys)).alias("b"),
     ).select(key_col, sketch_col, bucket.alias("bucket"))
-    # pre-salt persist of the POST-explode block table: the bucket-size
-    # aggregate and both self-join sides read it, so the n_blocks-x explode
-    # (and any sketch UDF upstream) runs once per row, not once per subtree
-    blocks = cache.scoped_persist(tag, blocks)
-    blocks = _salt_hot_buckets(blocks, key_col, max_bucket, tag=tag)
-    l, r = blocks.alias("l"), blocks.alias("r")
+    hamming = F.bit_count(
+        F.col(f"l.{sketch_col}").bitwiseXOR(F.col(f"r.{sketch_col}"))
+    ).alias("hamming")
     rep_pairs = (
-        l.join(r, ["bucket", "salt"])
-        .where(F.col(f"l.{key_col}") < F.col(f"r.{key_col}"))
-        .select(
-            F.col(f"l.{key_col}").alias("id_a"),
-            F.col(f"r.{key_col}").alias("id_b"),
-            F.bit_count(
-                F.col(f"l.{sketch_col}").bitwiseXOR(F.col(f"r.{sketch_col}"))
-            ).alias("hamming"),
-        )
+        _bucket_pairs(blocks, key_col, max_bucket, tag, hamming)
         .where(F.col("hamming") <= max_hamming)
         .distinct()  # sketches sharing several blocks; star pairs unique already
     )
@@ -495,38 +496,9 @@ def embedding_neardup_pairs(
         m = np.stack(vecs.map(np.asarray).to_numpy())
         return pd.Series(hyperplane_sketch(m, n_planes))
 
-    # pre-salt persist: the bucket UDF + collapse would otherwise re-run for
-    # the size aggregate and each self-join side
-    b = cache.scoped_persist(
-        "embedding_neardup",
-        reps.select(key_col, vec_col, bucket(F.col(vec_col)).alias("bucket")),
-    )
-    b = _salt_hot_buckets(b, key_col, max_bucket, tag="embedding_neardup")
-    l, r = b.alias("l"), b.alias("r")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(f"l.{vec_col}"),
-            F.col(f"r.{vec_col}"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda side: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.col(f"{side}.{vec_col}"),
-            F.lit(0.0),
-            lambda acc, v: acc + v.cast("double") * v.cast("double"),
-        )
-    )
-    rep_pairs = (
-        l.join(r, ["bucket", "salt"])
-        .where(F.col(f"l.{key_col}") < F.col(f"r.{key_col}"))
-        .select(
-            F.col(f"l.{key_col}").alias("id_a"),
-            F.col(f"r.{key_col}").alias("id_b"),
-            (dot / (norm("l") * norm("r"))).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    table = reps.select(key_col, vec_col, bucket(F.col(vec_col)).alias("bucket"))
+    cosine = cosine_col(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")).alias("cosine")
+    rep_pairs = _bucket_pairs(
+        table, key_col, max_bucket, "embedding_neardup", cosine
+    ).where(F.col("cosine") >= threshold)
     return rep_pairs.unionByName(star)

@@ -205,6 +205,21 @@ def connected_components(
     return labels
 
 
+def _groups(rows: DataFrame, key_col: str, labels: DataFrame) -> DataFrame:
+    """(key, group_id, is_kept) for every key of ``rows``: ``labels``
+    (node, component) names each grouped key's component minimum, a key
+    without a label is its own group, and the group minimum is kept."""
+    return (
+        rows.select(key_col)
+        .join(labels.withColumnRenamed("node", key_col), key_col, "left")
+        .select(
+            F.col(key_col),
+            F.coalesce("component", F.col(key_col)).alias("group_id"),
+        )
+        .withColumn("is_kept", F.col(key_col) == F.col("group_id"))
+    )
+
+
 def dedup_groups(
     docs: DataFrame,
     key_col: str = "doc_id",
@@ -252,17 +267,7 @@ def dedup_groups(
         F.col("id_b").alias("node"),
         F.coalesce("component", F.col("id_a")).alias("component"),
     )
-    labels = comp_reps.unionByName(member_labels)
-    out = (
-        docs.select(key_col)
-        .join(labels.withColumnRenamed("node", key_col), key_col, "left")
-        .select(
-            F.col(key_col),
-            F.coalesce("component", F.col(key_col)).alias("group_id"),
-        )
-        .withColumn("is_kept", F.col(key_col) == F.col("group_id"))
-    )
-    return out
+    return _groups(docs, key_col, comp_reps.unionByName(member_labels))
 
 
 def image_dedup_groups(
@@ -298,12 +303,4 @@ def image_dedup_groups(
     comp = connected_components(
         pairs.select("id_a", "id_b"), assume_canonical=True
     )
-    return (
-        images.select(key_col)
-        .join(comp.withColumnRenamed("node", key_col), key_col, "left")
-        .select(
-            F.col(key_col),
-            F.coalesce("component", F.col(key_col)).alias("group_id"),
-        )
-        .withColumn("is_kept", F.col(key_col) == F.col("group_id"))
-    )
+    return _groups(images, key_col, comp)

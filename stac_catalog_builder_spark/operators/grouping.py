@@ -38,18 +38,14 @@ def _extent_aggs() -> list:
 _BBOX_COLS = ("fp_w", "fp_s", "fp_e", "fp_n")
 
 
-def items_from_assets(
-    assets: DataFrame,
-    split_by_bbox: bool = True,
-    enforce_consistency: bool = False,
-) -> DataFrame:
+def items_from_assets(assets: DataFrame, enforce_consistency: bool = False) -> DataFrame:
     """Group asset rows into item rows (A1 + A2 + A3).
 
-    One shuffle: groupBy(item_id [+ bbox key]). With ``split_by_bbox`` (the
-    reference's semantics, builder.py:780-793), assets of one item_id with
-    different footprints split into separate item rows — the secondary key is
-    the exact micro-degree integer bbox tuple, so the split is deterministic
-    and engine-independent. Emits per-item asset array (sorted for
+    One shuffle: groupBy(item_id + bbox key). Assets of one item_id with
+    different footprints split into separate item rows (the reference's
+    semantics, builder.py:780-793) — the secondary key is the exact
+    micro-degree integer bbox tuple, so the split is deterministic and
+    engine-independent. Emits per-item asset array (sorted for
     deterministic output, the analogue of the reference's sorted links,
     builder.py:549), extent, and the consistency checks the reference asserts
     per group (builder.py:203-216) as ``n_*_distinct`` columns.
@@ -58,14 +54,12 @@ def items_from_assets(
     reference's hard asserts: a group whose assets disagree on datetime
     raises at execution time (builder.py:203-216 ItemBuilder asserts).
     """
-    keys = ["item_id"]
+    keys = ["item_id"] + [f"_bk_{c}" for c in _BBOX_COLS]
     df = assets
-    if split_by_bbox:
-        for c in _BBOX_COLS:
-            df = df.withColumn(
-                f"_bk_{c}", F.floor(F.col(c) * 100000.0 + F.lit(0.5)).cast("bigint")
-            )
-        keys += [f"_bk_{c}" for c in _BBOX_COLS]
+    for c in _BBOX_COLS:
+        df = df.withColumn(
+            f"_bk_{c}", F.floor(F.col(c) * 100000.0 + F.lit(0.5)).cast("bigint")
+        )
     # Exact distinct counts via collect_set, NOT countDistinct: two exact
     # countDistinct aggregates make Catalyst Expand every input row ~3x
     # before the biggest shuffle in the catalog path. asset_type and

@@ -49,6 +49,19 @@ def cosine_col(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, cosine): the ``k`` best-scored
+    neighbors per query, ties broken by neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cosine")
+    )
+
+
 def _leftfold_sq(m: np.ndarray) -> np.ndarray:
     """sum of squares per row with the SAME left-fold op order as
     ``F.aggregate``/DuckDB ``list_reduce`` (((0+v1^2)+v2^2)+...) — vectorized
@@ -132,14 +145,7 @@ def cosine_topk(
     partials = emb.select(key_col, vec_col).mapInPandas(
         _cosine_partial_topk_gen(qids, qm, key_col, vec_col, k), schema=schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _top_k(partials, k)
 
 
 def _bucket_udf(n_planes: int, n_tables: int):
@@ -191,14 +197,7 @@ def ann_lsh_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 def quantize_embeddings(
@@ -304,11 +303,4 @@ def ivf_topk(
             cosine_col(F.col("qvec"), F.col("nvec")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _top_k(scored, k)

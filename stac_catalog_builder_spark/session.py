@@ -52,31 +52,15 @@ _JAVA_OPTS = " ".join(
 ).strip()
 
 # Configs chosen for a 1000-executor / 100 TB deployment and scaled down for
-# local[N] tests: AQE re-plans shuffles at runtime (coalesce tiny partitions,
-# split skewed ones, convert SMJ->broadcast), Arrow keeps the pandas-UDF
-# boundary cheap, UTC pins timestamp semantics for oracle comparison.
+# local[N] tests: Arrow keeps the pandas-UDF boundary cheap, UTC pins
+# timestamp semantics for oracle comparison. The engine also relies on Spark
+# defaults it does not restate (tests/test_session.py pins them): AQE
+# (coalesce tiny partitions, split skewed ones, convert SMJ->broadcast),
+# parallelismFirst coalescing (with it off, r5 ran every post-shuffle stage
+# at bench scale on one core), 10k-row Arrow batches and 128 MiB splits.
 _BASE_CONF = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # parallelismFirst=true (the Spark default): when post-shuffle bytes are
-    # below parallelism x advisory size, coalesce down to ~1MB partitions
-    # that still respect the core count instead of collapsing to ONE task.
-    # r5 ran with "false", which serialized every post-shuffle stage at
-    # bench scale (a 10MB aggregate input coalesced to a single 64MB-target
-    # partition — measured: hll_distinct register build and the LSH
-    # signature stages ran on one core). At production scale partitions
-    # exceed the advisory size and the flag is irrelevant, so "true" is the
-    # scale-adaptive setting, not a local tune.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # pandas UDF batches: big enough to amortize Arrow transfer, small enough
-    # to bound executor memory per batch at wide rows (binary image columns).
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    # 128 MB input splits — the parquet-side default that keeps a 100 TB scan
-    # at ~800k tasks on 1000 executors; local tests override nothing.
-    "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # Spark's generated-class cache (a static conf, read at JVM start). The

@@ -212,13 +212,17 @@ def test_union_area_plan_jvm_only(spark):
     assert "NestedLoop" not in plan
 
 
-def test_minhash_self_join_keys_on_bucket_and_salt(spark):
-    """The guarded LSH self-join keys on (bucket, salt) on every input —
-    the salt is never constant-folded away — with no nested-loop or
-    cartesian join, and no Window over a whole bucket (a hot bucket must
-    never land in one task). ArrowEvalPython nodes are not counted here:
-    every InMemoryRelation reference prints its cached plan again."""
-    plan = _plan(e.queries()["minhash_pairs"](spark, SF))
+@pytest.mark.parametrize(
+    "query", ["minhash_pairs", "simhash_pairs", "phash_neardup", "embedding_neardup"]
+)
+def test_lsh_self_join_keys_on_bucket_and_salt(spark, query):
+    """Every pair operator's guarded LSH self-join keys on (bucket, salt) on
+    every input — the salt is never constant-folded away — with no
+    nested-loop or cartesian join, and no Window over a whole bucket (a hot
+    bucket must never land in one task). ArrowEvalPython nodes are not
+    counted here: every InMemoryRelation reference prints its cached plan
+    again."""
+    plan = _plan(e.queries()[query](spark, SF))
     join_keys = re.findall(r"Join \[([^\]]*)\], \[([^\]]*)\]", plan)
     assert any(
         all("bucket#" in side and "salt#" in side for side in keys)

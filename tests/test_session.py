@@ -90,6 +90,24 @@ def test_driver_jvm_carries_c2_thresholds(spark):
         assert flag in args, sorted(args)
 
 
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("spark.sql.adaptive.enabled", "true"),
+        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+        ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"),
+        ("spark.sql.adaptive.skewJoin.enabled", "true"),
+        ("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"),
+        ("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)),
+    ],
+)
+def test_session_reads_the_spark_defaults_it_relies_on(spark, key, value):
+    # get_spark sets none of these: a Spark upgrade that changes one of them
+    # changes how every shuffle, pandas-UDF batch or scan split is planned
+    got = spark.conf.get(key)
+    assert got.removesuffix("b") == value, got  # byte confs read "<n>b"
+
+
 def _leaf(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString().split("\n")[0]
 
