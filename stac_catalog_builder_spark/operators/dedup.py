@@ -58,7 +58,11 @@ def with_minhash(df: DataFrame, text_col: str = "text", bands: int = 16) -> Data
         keys = batch_minhash_bands(batch_minhash_sigs(texts.tolist()), bands)
         return pd.Series(list(keys))
 
-    return df.withColumn("band_keys", bandkeys(F.col(text_col)))
+    # Nondeterministic, so Catalyst evaluates it only where it is written: a
+    # consumer's explode(band_keys) infers size(band_keys) > 0, and that
+    # filter, pushed below this projection, carried a second copy of the
+    # UDF (two ArrowEvalPython nodes, every text's keys computed twice).
+    return df.withColumn("band_keys", bandkeys.asNondeterministic()(F.col(text_col)))
 
 
 def _exact_collapse(

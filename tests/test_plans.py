@@ -260,3 +260,18 @@ def test_pip_join_and_resume_plans_read_no_python_rdd(spark, tmp_path):
     plan = _optimized(todo)
     assert "LogicalRDD" not in plan, plan
     assert todo.count() == 0
+
+
+def test_minhash_band_key_udf_once_in_the_cached_table(spark):
+    """The signature table that minhash candidate generation persists
+    evaluates the band-key pandas UDF in ONE ArrowEvalPython node: the
+    size(band_keys) > 0 filter Catalyst infers from the explode must not
+    carry a second copy of the UDF below the projection."""
+    from stac_catalog_builder_spark import cache
+    from stac_catalog_builder_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    with cache.run():
+        dedup.minhash_candidate_parts(docs)
+        table = cache._SCOPE.get().caches["minhash_pairs"]
+        assert _plan(table).count("ArrowEvalPython [bandkeys(") == 1, _plan(table)
