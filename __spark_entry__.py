@@ -30,7 +30,11 @@ from stac_catalog_builder_spark.operators.grouping import (
 )
 from stac_catalog_builder_spark.operators import multimodal
 from stac_catalog_builder_spark.operators.knn import knn_join, knn_join_cellring
-from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
+from stac_catalog_builder_spark.operators.spatial_join import (
+    polygon_frame_dim,
+    prepare_polygon_dim,
+    spatial_join_pip,
+)
 from stac_catalog_builder_spark.operators.tiling import with_tile
 from stac_catalog_builder_spark.plans import relational
 
@@ -48,17 +52,20 @@ def _ext_micro() -> list[F.Column]:
 
 
 def _images_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # synth.images' fan_out stays off for the JVM-only pipelines (r6): the
+    # synth.images' fan_out stays off for the JVM-only pipelines: the
     # single-row-group scan does serialize the first map stage, but at this
     # table width the repartition round trip costs more than the serial
-    # projection it parallelizes (interleaved A/B: cell_assign 0.43->0.56,
-    # knn 0.85->0.98, hll 3.0->3.8). Python-kernel consumers are the
-    # exception — with_encoded_bytes fans out internally (10.5s -> 1.5s).
+    # projection it parallelizes (r6 interleaved A/B at 32 cores, not
+    # repeated at 4: cell_assign 0.43->0.56, knn 0.85->0.98, hll
+    # 3.0->3.8). Python-kernel consumers are the
+    # exception — with_encoded_bytes fans out internally (4-core A/B, sf0.1,
+    # warm passes: image_decode_stats 4.61-4.93 s, 9.41-10.89 s without).
     return with_footprint(synth.images(spark, sf_dir))
 
 
 def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spatial_join_pip(_images_fp(spark, sf_dir), synth.boundary_polygons(sf_dir))
+    dim = prepare_polygon_dim(spark, synth.boundary_polygons(sf_dir))
+    return spatial_join_pip(_images_fp(spark, sf_dir), dim)
 
 
 # Names kept for the bench harnesses (bench.py, perfbench/), which call them.
@@ -431,13 +438,12 @@ def q_tags_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     override = F.create_map(
         F.lit("rev"), F.lit("v9"), F.lit("proc"), F.lit("l2a")
     )
-    # fan_out=True (measured, r6 follow-up): this is the one single-pass
-    # map-heavy JVM row where the key-column shuffle pays for itself — the
-    # tags map build+sanitize+merge+explode costs ~0.8s serial (interleaved
-    # A/B 1.03-1.22 -> 0.91-1.02s). The same A/B on bands_explode/
-    # fixity_audit/sequence_pack was a wash and tile_pyramid REGRESSED 2.3x
-    # (its rollup stages inherit the fanned partition count) — all left
-    # serial.
+    # fan_out=True: this is the one single-pass map-heavy JVM row where the
+    # key-column shuffle pays for itself (4-core A/B, sf0.1, warm passes:
+    # 1.50-1.63 s with the fan-out, 1.77-2.23 s without). The r6 A/B at 32
+    # cores on bands_explode/fixity_audit/sequence_pack was a wash and
+    # tile_pyramid REGRESSED 2.3x (its rollup stages inherit the fanned
+    # partition count) — all left serial.
     merged = assets_ops.with_merged_tags(
         synth.images(spark, sf_dir, fan_out=True), override
     )
@@ -792,14 +798,10 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_spatial_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only (transitively exact: pytest asserts row-identical output to
-    the oracle-proven broadcast variant): PIP join via the SHUFFLE equi-join
-    path — the shape for polygon dimensions too large to broadcast
-    (distributed cover computation, cell-partitioned candidates, same JVM
-    ray cast)."""
-    from stac_catalog_builder_spark.operators.spatial_join import (
-        spatial_join_pip_partitioned,
-    )
-
+    the oracle-proven driver-built dimension): PIP join against a polygon
+    dimension built from a DataFrame (``polygon_frame_dim``: distributed
+    cover computation, same join and JVM ray cast). The broadcast budget
+    picks broadcast or shuffle joins, as for every PIP join."""
     polys = synth.boundary_polygons(sf_dir)
     pdf = local_frame(
         spark,
@@ -812,8 +814,8 @@ def q_spatial_join_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ring_y array<double>",
     )
     imgs = _images_fp(spark, sf_dir).select("image_id", "lon", "lat")
-    max_v = max(len(p["ring_x"]) for p in polys)
-    return spatial_join_pip_partitioned(imgs, pdf, max_vertices=max_v).select(
+    dim = polygon_frame_dim(pdf, max_vertices=max(len(p["ring_x"]) for p in polys))
+    return spatial_join_pip(imgs, dim).select(
         "image_id", F.col("poly_id").alias("tile_id"), "collection_id"
     )
 

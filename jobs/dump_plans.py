@@ -80,8 +80,9 @@ def main() -> None:
     sections = [
         (
             "Flagship spatial join + tile assignment",
-            "Claim: single-column pruned scan, broadcast-only joins, zero "
-            "Python evals, whole-stage codegen end-to-end.",
+            "Claim: single-column pruned scan, broadcast-only joins (no "
+            "hint: the polygon dimension fits the session's broadcast "
+            "budget), zero Python evals, whole-stage codegen end-to-end.",
             flagship,
         ),
         (

@@ -71,6 +71,48 @@ def point_in_polygon_np(
     return (crossings.sum(axis=1) % 2).astype(bool)
 
 
+def _segment_hits_rects(x1, y1, x2, y2, w, s, e, n) -> np.ndarray:
+    """Vectorized Liang-Barsky: one segment vs arrays of rects [w,e]x[s,n]."""
+    dx, dy = x2 - x1, y2 - y1
+    t0 = np.zeros_like(w)
+    t1 = np.ones_like(w)
+    ok = np.ones(len(w), dtype=bool)
+    for p, q in ((-dx, x1 - w), (dx, e - x1), (-dy, y1 - s), (dy, n - y1)):
+        if p == 0:
+            ok &= q >= 0
+            continue
+        r = q / p
+        if p < 0:
+            ok &= r <= t1
+            t0 = np.maximum(t0, r)
+        else:
+            ok &= r >= t0
+            t1 = np.minimum(t1, r)
+    return ok & (t0 <= t1)
+
+
+def rects_inside_polygon_np(
+    w: np.ndarray, s: np.ndarray, e: np.ndarray, n: np.ndarray, vx: np.ndarray, vy: np.ndarray
+) -> np.ndarray:
+    """Which rectangles [w,e]x[s,n] lie entirely inside ONE polygon: all 4
+    corners inside and no polygon edge crossing the rectangle (exact for
+    simple polygons; any edge touch counts as a crossing). Vectorized over
+    the rectangles; the spatial join's interior cover cells and the
+    rasterizer's all-ones tiles are both this test."""
+    inside = (
+        point_in_polygon_np(w, s, vx, vy)
+        & point_in_polygon_np(e, s, vx, vy)
+        & point_in_polygon_np(e, n, vx, vy)
+        & point_in_polygon_np(w, n, vx, vy)
+    )
+    V = len(vx)
+    edge_hit = np.zeros(len(w), dtype=bool)
+    for i in range(V):
+        j = (i + 1) % V
+        edge_hit |= _segment_hits_rects(vx[i], vy[i], vx[j], vy[j], w, s, e, n)
+    return inside & ~edge_hit
+
+
 def polygon_bounds(poly_x, poly_y) -> tuple[float, float, float, float]:
     return (
         float(np.min(poly_x)),

@@ -424,7 +424,7 @@ def rasterize_polygons(
         raise ValueError(f"tile_cells must be >= 1: {tile_cells}")
     if cell_micro < 1:
         raise ValueError(f"cell_micro must be >= 1: {cell_micro}")
-    from ..functions.geo import point_in_polygon_np
+    from ..functions.geo import point_in_polygon_np, rects_inside_polygon_np
 
     T, C = int(tile_cells), int(cell_micro)
     span = T * C  # tile edge in micro-degrees
@@ -490,32 +490,24 @@ def rasterize_polygons(
             .repartition(n_paint, "tile_x", "tile_y")
         )
 
-    from .spatial_join import _segment_hits_rects
-
     _full_raw = encode_raw(np.ones((T, T), dtype=np.uint8))
 
     def _tile_fully_inside(tx: int, ty: int, vx: np.ndarray, vy: np.ndarray) -> bool:
-        """Interior-tile fast path (r6, same classification as the spatial
-        join's cover cells): if all 4 corners of the tile bbox are inside
-        the polygon and no polygon edge intersects the bbox, every cell
-        CENTER is inside — the mask is all-ones without 4096 ray casts.
+        """Interior-tile fast path (the spatial join's cover-cell test on
+        the tile bbox): a tile entirely inside the polygon has every cell
+        CENTER inside — the mask is all-ones without 4096 ray casts.
         Conservative: any edge touch falls back to the exact per-center
         paint, so output bytes are identical either way."""
-        x0 = (span * tx) / 40000.0 - 180.0
-        x1 = (span * (tx + 1)) / 40000.0 - 180.0
-        y0 = (span * ty) / 40000.0 - 90.0
-        y1 = (span * (ty + 1)) / 40000.0 - 90.0
-        cx = np.array([x0, x1, x1, x0])
-        cy = np.array([y0, y0, y1, y1])
-        if not point_in_polygon_np(cx, cy, vx, vy).all():
-            return False
-        w = np.array([x0]); s = np.array([y0]); e = np.array([x1]); n = np.array([y1])
-        V = len(vx)
-        for i in range(V):
-            j = (i + 1) % V
-            if _segment_hits_rects(vx[i], vy[i], vx[j], vy[j], w, s, e, n)[0]:
-                return False
-        return True
+        return bool(
+            rects_inside_polygon_np(
+                np.array([(span * tx) / 40000.0 - 180.0]),
+                np.array([(span * ty) / 40000.0 - 90.0]),
+                np.array([(span * (tx + 1)) / 40000.0 - 180.0]),
+                np.array([(span * (ty + 1)) / 40000.0 - 90.0]),
+                vx,
+                vy,
+            )[0]
+        )
 
     def paint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

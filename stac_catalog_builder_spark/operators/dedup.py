@@ -76,7 +76,8 @@ def _exact_collapse(
     connectivity with O(group) rows instead of the O(group^2) an LSH bucket
     of identical payloads would emit — THE hot-bucket pathology at 100 TB.
     ``hash_expr`` customizes the identity hash (default: md5 of the payload
-    column; embeddings hash their string form).
+    column; sketches and embeddings hash their string form). It must be null
+    exactly when the payload is: null payloads are dropped.
 
     CONTRACT NOTE: downstream candidate sets become CONNECTIVITY-PRESERVING
     (rep-expanded), not the full bucket-pair set — a duplicate-group member
@@ -89,7 +90,14 @@ def _exact_collapse(
     if hash_expr is None:
         hash_expr = F.md5(F.col(payload_col))
     text_col = payload_col
-    hashed = df.select(key_col, text_col, hash_expr.alias("_ch"))
+    # an inner join on a nullable _ch makes Catalyst infer isnotnull(_ch)
+    # and push it below this projection: a second hash of every payload.
+    # Only null payloads hash to null, and the join drops those rows anyway:
+    # filter them first, and the coalesce declares _ch non-nullable, so no
+    # filter is inferred
+    hashed = df.where(F.col(text_col).isNotNull()).select(
+        key_col, text_col, F.coalesce(hash_expr, F.lit("")).alias("_ch")
+    )
     # groupBy + join back, NOT a whole-group window: the aggregate combines
     # map-side (a 10^9-row duplicate group ships one partial per task, not
     # 10^9 rows into one window task) and AQE skew-join splits the hot _ch

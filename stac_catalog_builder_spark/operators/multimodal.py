@@ -52,9 +52,10 @@ def with_encoded_bytes(df: DataFrame) -> DataFrame:
     The input is fanned out BELOW the encode UDF (parallel.fan_out, a no-op
     when the scan already feeds the cluster): the encode kernel is the
     dominant cost of every bytes-bearing pipeline, and a single-row-group
-    scan would otherwise run it on one core (measured 10.5s -> 1.5s for the
-    4k-image shard-sink source at 32 cores). Encoding is a pure function of
-    (phash, w, h, fmt), so partitioning never changes a payload byte."""
+    scan would otherwise run it on one core (4-core A/B, sf0.1, warm
+    passes: the 4k-image write_shards sink 6.14-6.49 s with the fan-out,
+    12.13-14.25 s without). Encoding is a pure function of (phash, w, h,
+    fmt), so partitioning never changes a payload byte."""
     from ..parallel import fan_out
 
     @F.pandas_udf(T.BinaryType())

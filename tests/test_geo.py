@@ -97,7 +97,10 @@ def test_spatial_join_nonrectangular_polygons(spark):
     from pyspark.sql import functions as F
 
     from stac_catalog_builder_spark.functions.geo import point_in_polygon_np
-    from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
+    from stac_catalog_builder_spark.operators.spatial_join import (
+        prepare_polygon_dim,
+        spatial_join_pip,
+    )
 
     tri_x, tri_y = np.array([0.0, 10.0, 5.0]), np.array([0.0, 0.0, 8.0])
     # L-shape (concave hexagon)
@@ -118,7 +121,9 @@ def test_spatial_join_nonrectangular_polygons(spark):
     )
     got = {
         (r.image_id, r.tile_id)
-        for r in spatial_join_pip(df, polys, cover_res=5).collect()
+        for r in spatial_join_pip(
+            df, prepare_polygon_dim(spark, polys, cover_res=5)
+        ).collect()
     }
     want = set()
     for name, (vx, vy) in (("tri", (tri_x, tri_y)), ("ell", (l_x, l_y))):
@@ -226,7 +231,8 @@ def test_partitioned_pip_empty_and_bad_schema(spark):
     from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators.footprints import with_footprint
     from stac_catalog_builder_spark.operators.spatial_join import (
-        spatial_join_pip_partitioned,
+        polygon_frame_dim,
+        spatial_join_pip,
     )
 
     SF = "/root/testdata/sf0.001"
@@ -234,24 +240,25 @@ def test_partitioned_pip_empty_and_bad_schema(spark):
     empty = spark.createDataFrame(
         [], "poly_id string, ring_x array<double>, ring_y array<double>"
     )
-    out = spatial_join_pip_partitioned(images, empty, max_vertices=3)
+    out = spatial_join_pip(images, polygon_frame_dim(empty, max_vertices=3))
     assert out.count() == 0
     assert {"image_id", "lon", "lat", "poly_id"} <= set(out.columns)
 
     bad = spark.createDataFrame([("p", [1.0])], "poly_id string, ring_x array<float>")
     with _pytest.raises(ValueError, match="ring_x"):
-        spatial_join_pip_partitioned(images, bad, max_vertices=3)
+        polygon_frame_dim(bad, max_vertices=3)
 
 
 def test_partitioned_pip_runs_no_job_at_call_time(spark):
-    """The caller passes the ray cast's unroll width, so building the
-    partitioned PIP plan runs no Spark job."""
+    """The caller passes the ray cast's unroll width, so building a frame
+    dimension and the PIP plan over it runs no Spark job."""
     from conftest import SF0001, jobs_run_by
 
     from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators.footprints import with_footprint
     from stac_catalog_builder_spark.operators.spatial_join import (
-        spatial_join_pip_partitioned,
+        polygon_frame_dim,
+        spatial_join_pip,
     )
 
     images = with_footprint(synth.images(spark, SF0001)).select("image_id", "lon", "lat")
@@ -262,23 +269,24 @@ def test_partitioned_pip_runs_no_job_at_call_time(spark):
     _, jobs = jobs_run_by(
         spark,
         "pip-partitioned-plan",
-        lambda: spatial_join_pip_partitioned(images, polys, max_vertices=4),
+        lambda: spatial_join_pip(images, polygon_frame_dim(polys, max_vertices=4)),
     )
     assert jobs == []
 
 
 def test_partitioned_pip_matches_broadcast(spark):
-    """spatial_join_pip_partitioned (shuffle equi-join path for
-    non-broadcastable polygon dims) must return EXACTLY the broadcast
-    variant's rows — on the 25-boundary fixture AND on a 200-polygon grid
-    with non-rectangular (hexagon-ish) rings."""
+    """A frame dimension (``polygon_frame_dim``: the cover computed in the
+    cluster, for polygon sets too large to collect) must give EXACTLY the
+    driver-built dimension's rows — on the 25-boundary fixture AND on a
+    200-polygon grid with non-rectangular (hexagon-ish) rings."""
     import pandas as pd
 
     from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators.footprints import with_footprint
     from stac_catalog_builder_spark.operators.spatial_join import (
+        polygon_frame_dim,
+        prepare_polygon_dim,
         spatial_join_pip,
-        spatial_join_pip_partitioned,
     )
 
     SF = "/root/testdata/sf0.001"
@@ -299,7 +307,9 @@ def test_partitioned_pip_matches_broadcast(spark):
 
         def part(max_vertices):
             return (
-                spatial_join_pip_partitioned(images, pdf, max_vertices=max_vertices)
+                spatial_join_pip(
+                    images, polygon_frame_dim(pdf, max_vertices=max_vertices)
+                )
                 .select("image_id", "poly_id")
                 .toPandas()
                 .sort_values(["image_id", "poly_id"])
@@ -307,7 +317,9 @@ def test_partitioned_pip_matches_broadcast(spark):
             )
 
         bcast = (
-            spatial_join_pip(images, polys, keep_cols=("poly_id",))
+            spatial_join_pip(
+                images, prepare_polygon_dim(spark, polys, keep_cols=("poly_id",))
+            )
             .select("image_id", "poly_id")
             .toPandas()
             .sort_values(["image_id", "poly_id"])

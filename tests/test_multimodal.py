@@ -250,11 +250,16 @@ def test_zonal_stats_matches_numpy_oracle(spark):
     from stac_catalog_builder_spark.functions.codecs import make_raster
     from stac_catalog_builder_spark.operators import multimodal
     from stac_catalog_builder_spark.operators.footprints import with_footprint
-    from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
+    from stac_catalog_builder_spark.operators.spatial_join import (
+        prepare_polygon_dim,
+        spatial_join_pip,
+    )
 
     SF = "/root/testdata/sf0.001"
     imgs = with_footprint(synth.images(spark, SF)).limit(200)
-    assigned = spatial_join_pip(imgs, synth.boundary_polygons(SF))
+    assigned = spatial_join_pip(
+        imgs, prepare_polygon_dim(spark, synth.boundary_polygons(SF))
+    )
     assigned = multimodal.with_encoded_bytes(assigned)
     out = {
         (r.collection_id, r.tile_id): r
@@ -291,11 +296,16 @@ def test_zonal_stats_multi_zone_assignment(spark):
     from stac_catalog_builder_spark import synth
     from stac_catalog_builder_spark.operators import multimodal
     from stac_catalog_builder_spark.operators.footprints import with_footprint
-    from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
+    from stac_catalog_builder_spark.operators.spatial_join import (
+        prepare_polygon_dim,
+        spatial_join_pip,
+    )
 
     SF = "/root/testdata/sf0.001"
     imgs = with_footprint(synth.images(spark, SF)).limit(60)
-    one_zone = spatial_join_pip(imgs, synth.boundary_polygons(SF))
+    one_zone = spatial_join_pip(
+        imgs, prepare_polygon_dim(spark, synth.boundary_polygons(SF))
+    )
     # assign EVERY image to a second zone (same collection, shifted tile id)
     two_zone = one_zone.unionByName(
         one_zone.withColumn("tile_id", F.concat(F.col("tile_id"), F.lit("_dup")))

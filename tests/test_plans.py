@@ -2,7 +2,7 @@
 at 100 TB, asserted on the actual executed plans so they can't silently rot.
 
 - hot paths stay JVM-side (zero Python evals in the flagship plan),
-- dimension joins broadcast (no SortMergeJoin anywhere),
+- dimension joins broadcast while they fit the session's broadcast budget,
 - scans are column-pruned and filters are pushed to parquet.
 """
 
@@ -145,10 +145,10 @@ def test_cellring_fallback_dropped_when_all_certify(spark):
 
 
 def test_partitioned_pip_plan_shuffle_join_no_python_refine(spark):
-    """The partitioned PIP path must join on the cover cell via a SHUFFLE
-    hash/merge join (no broadcast of the polygon side is assumed, no
-    nested-loop/cartesian), and the refine stage must stay JVM (the only
-    Python is the polygon-side cover computation)."""
+    """The PIP join over a frame-built dimension joins on the cover cell by
+    equi-join (the broadcast budget picks broadcast or shuffle; never a
+    nested-loop/cartesian), and the refine stage stays JVM (the only Python
+    is the polygon-side cover computation)."""
     plan = _plan(e.queries()["spatial_join_partitioned"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -244,12 +244,9 @@ def test_pip_join_and_resume_plans_read_no_python_rdd(spark, tmp_path):
     checkpoint's metrics and lineage upserts) is a JVM LocalRelation, not a
     pickled LogicalRDD: a job over a LogicalRDD starts Python workers though
     the plan runs no Python code."""
-    from stac_catalog_builder_spark.operators.spatial_join import spatial_join_pip
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
 
-    assigned = spatial_join_pip(
-        e._images_fp(spark, SF), polygons=synth.boundary_polygons(SF)
-    )
+    assigned = e._assigned(spark, SF)
     plan = _optimized(assigned)
     assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
@@ -275,3 +272,36 @@ def test_minhash_band_key_udf_once_in_the_cached_table(spark):
         dedup.minhash_candidate_parts(docs)
         table = cache._SCOPE.get().caches["minhash_pairs"]
         assert _plan(table).count("ArrowEvalPython [bandkeys(") == 1, _plan(table)
+
+
+def test_exact_collapse_hashes_each_text_once(spark):
+    """minhash_pairs' cached collapse table hashes each text once per side
+    of its join: the plan carries no isnotnull(md5(...)) filter, which an
+    inner equi-join on the hash makes Catalyst infer and push below the
+    projection that computes the hash."""
+    from stac_catalog_builder_spark import cache
+
+    with cache.run():
+        plan = _optimized(e.queries()["minhash_pairs"](spark, SF))
+    assert "md5(" in plan and "isnotnull(md5(" not in plan, plan
+
+
+def test_pip_join_strategy_follows_the_broadcast_budget(spark):
+    """The PIP join carries no broadcast hint: at the session's budget both
+    dimension joins broadcast, and with autoBroadcastJoinThreshold=-1 both
+    plan as sort-merge joins and return the same rows."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = e.q_spatial_join(spark, SF)
+    plan = _plan(default)
+    assert plan.count("BroadcastHashJoin") == 2 and "SortMergeJoin" not in plan, plan
+    want = sorted(default.collect())
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = e.q_spatial_join(spark, SF)
+        plan = _plan(shuffled)
+        assert plan.count("SortMergeJoin") == 2, plan
+        assert "BroadcastHashJoin" not in plan, plan
+        assert sorted(shuffled.collect()) == want
+    finally:
+        spark.conf.set(key, old)
