@@ -10,7 +10,7 @@ Cluster launch (the north rule's deployment shape):
 
 Local smoke: ``python jobs/flagship_job.py --input /root/testdata/sf0.001
 --output /tmp/catalog_out``. Re-running with the same output resumes from the
-snapshot lineage (completed partitions are anti-joined away).
+checkpoint's commit table (committed partitions are anti-joined away).
 """
 
 from __future__ import annotations

@@ -18,8 +18,8 @@ Layout
                    point-in-polygon spatial join, kNN, tiling, item/collection
                    grouping + extent aggregation, dedup, similarity, text ops,
                    multimodal decode.
-- ``sources/``   : partitioned parquet sinks + snapshot/lineage/metrics
-                   checkpoint tables with anti-join resume.
+- ``sources/``   : partitioned parquet sinks + a snapshot-log and
+                   commit-table checkpoint with anti-join resume.
 - ``plans/``     : end-to-end pipelines (flagship spatial-join + tile-assignment).
 - ``streaming/`` : Structured Streaming analogues (windowed event rollups).
 """

@@ -187,27 +187,26 @@ def ann_lsh_topk(
     q = queries.select(
         "query_id", "qvec", F.explode(buckets(F.col("qvec"))).alias("bucket")
     )
+    # a pair sharing several buckets is one candidate: deduplicate before
+    # scoring so each pair's d-length folds run once
     scored = (
         fact.join(F.broadcast(q), "bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
         .select(
             "query_id",
             "neighbor_id",
             cosine_col(F.col("qvec"), F.col("nvec")).alias("cosine"),
         )
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     return _top_k(scored, k)
 
 
-def quantize_embeddings(
-    emb: DataFrame, vec_col: str = "embedding", bits: int = 8
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Symmetric per-vector int8 quantization: 4x the storage (and shuffle
     bytes) of float32 at 10^12-vector scale. Pure JVM: per-row max-abs scale,
     ``transform`` to tinyint codes. ``dequantize_col`` restores approximate
     floats; cosine top-k recall on the synthetic corpus is pytest-gated."""
-    assert bits == 8, "int8 is the supported code width"
     scale = F.greatest(
         F.aggregate(
             F.col(vec_col),

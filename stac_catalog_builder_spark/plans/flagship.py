@@ -12,8 +12,8 @@ Reference pipeline (SURVEY.md §3.1) -> Spark stage:
     tile assignment                              -> with_tile / tile_cover
     collection extent + year-grouped rollup      -> collection_rollup
     partitioned item JSON sink (y/m/d)           -> write_items_partitioned
-    resumable slices + progress logging          -> SnapshotStore lineage +
-                                                    _metrics rows
+    resumable slices + progress logging          -> SnapshotStore commit
+                                                    table (_metrics rows)
 
 The two thread-pool boundaries of the reference (collector.py:227,
 async_utils.py:56) disappear into executor parallelism; the hand-rolled
@@ -47,8 +47,9 @@ def build_catalog(
     replicate: int = 1,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns the intermediate DataFrames keyed by
-    stage. With ``out_dir`` set, also writes partitioned items + lineage +
-    metrics through the SnapshotStore (resumable via anti-join).
+    stage. With ``out_dir`` set, also writes partitioned items and the
+    assignments stage through the SnapshotStore, whose one commit table
+    holds a (part_key, n_rows) row per partition (resumable via anti-join).
 
     ``item_postprocessor`` is the reference's arbitrary per-item hook
     (builder.py:646, 753-754): a mapInPandas callable
@@ -85,8 +86,8 @@ def build_catalog(
         write_items_partitioned(
             items.withColumn("datetime", F.col("dt_min")), f"{out_dir}/items"
         )
-        # per-partition lineage + metrics rows (north rule): assignments
-        # keyed by collection; RESUME = anti-join completed lineage, so a
+        # one commit row per partition (north rule): assignments keyed by
+        # collection; RESUME = anti-join the commit table, so a
         # re-run writes only missing partitions (the reference's
         # skip-if-stored semantics, terracatalog.py:497-505)
         to_write = tiled.select(

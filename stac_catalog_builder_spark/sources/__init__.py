@@ -1,1 +1,1 @@
-"""Sources & sinks: partitioned parquet, snapshot/lineage checkpointing."""
+"""Sources & sinks: partitioned parquet, snapshot/commit-table checkpointing."""

@@ -102,18 +102,9 @@ def validate_collection_payload(payload: dict) -> None:
         )
 
 
-def write_items_partitioned(
-    items: DataFrame,
-    out_dir: str,
-    fmt: str = "json",
-    spec: dict[str, str | None] | None = None,
-) -> None:
+def write_items_partitioned(items: DataFrame, out_dir: str, fmt: str = "json") -> None:
     """S7: items partitioned by (year, month, day) — one file set per day
-    directory, written in parallel by executors. Pass ``spec`` (e.g.
-    ``ITEM_SPEC``) to shape-validate every document before anything is
-    written."""
-    if spec is not None:
-        validate_documents(items, spec)
+    directory, written in parallel by executors."""
     base = items
     if "year" not in items.columns:
         base = base.withColumn("year", F.year("datetime"))

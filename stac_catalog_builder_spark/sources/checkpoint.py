@@ -1,45 +1,49 @@
-"""Snapshot / lineage / metrics checkpointing with anti-join resume.
+"""Snapshot / commit-table checkpointing with anti-join resume.
 
 Reproduces the reference's resumability semantics — spill slice intermediates
 to (geo)parquet, skip already-stored slots on re-run, restore and concatenate
 (stacbuilder/terracatalog.py:339-396, 493-551) — as Iceberg-style tables on
 plain parquet (no Iceberg jars in this environment; the layout mirrors
-snapshot manifests + per-partition lineage the north rule requires):
+snapshot manifests + a per-partition commit table the north rule requires):
 
     <root>/<stage>/data/part_key=<v>/...parquet      partitioned stage output
-    <root>/<stage>/_lineage/...parquet               one row per completed partition
-    <root>/<stage>/_metrics/...parquet               per-partition row counts etc.
+    <root>/<stage>/_metrics/...parquet               one commit row per partition:
+                                                     (part_key, n_rows, stage)
     <root>/<stage>/_snapshots.json                   append-only snapshot log
     <root>/<stage>/_schema.json                      written schema + partition column
 
-Resume = left_anti join of the pending work's partition keys against
-``_lineage`` (the reference's "skip if stored" check, terracatalog.py:366-375),
-so a re-run only computes missing partitions.
+A partition is committed once its ``_metrics`` row exists. Resume = left_anti
+join of the pending work's partition keys against ``_metrics`` (the
+reference's "skip if stored" check, terracatalog.py:366-375), so a re-run
+only computes missing partitions.
 
-Exactly-once per partition:
-- the data write uses **dynamic partition overwrite** (the writer option
-  ``partitionOverwriteMode=dynamic`` + ``mode("overwrite")``; the session
-  conf is never touched) so a crash-retry *replaces* a partially-committed
-  partition instead of appending duplicate rows;
-- ``_metrics`` and ``_lineage`` are themselves partitioned by ``part_key``
-  and written with dynamic overwrite, so every step of the commit protocol is
-  an idempotent per-partition upsert — any crash/retry interleaving converges
-  to exactly one copy of data, metrics, and lineage per partition;
-- the lineage row is written last (commit marker).
+Commit protocol, exactly-once per partition:
+1. record the stage schema in ``_schema.json`` (so a crash anywhere later
+   still leaves the stage readable); a write whose schema differs from the
+   recorded one is refused, and ``read_stage`` reads with it;
+2. write the data with **dynamic partition overwrite** (the writer option
+   ``partitionOverwriteMode=dynamic`` + ``mode("overwrite")``; the session
+   conf is never touched), so a crash-retry *replaces* a partially-committed
+   partition instead of appending duplicate rows;
+3. count rows per partition by a *file-level read-back* of the data
+   (partition-column-only scan = parquet footer metadata), never by
+   re-running the upstream stage DAG, which would double the cost of every
+   checkpointed write at 100 TB;
+4. upsert the ``_metrics`` rows of the new and the recounted partitions,
+   last: the commit marker. ``_metrics`` is partitioned by ``part_key`` and
+   written with dynamic overwrite too, so every step is an idempotent
+   per-partition upsert and any crash/retry interleaving converges to one
+   copy of data and one commit row per partition; a crash before step 4
+   leaves the partition pending;
+5. append the snapshot line (it records the schema its write used).
 
-Cost discipline at 100 TB: metrics/lineage derive from a *file-level
-read-back* of the partitions just written (partition-column-only scan =
-parquet footer metadata), never by re-running the upstream stage DAG — a
-naive ``df.count()``-style metrics pass would double the cost of every
-checkpointed write.
+A stage that also holds a ``_lineage`` table (an older layout that wrote a
+second marker after ``_metrics``) reads unchanged: ``_lineage`` is never
+read, and every key it committed has a ``_metrics`` row.
 
 Partition keys round-trip as **strings** (their Hive directory form): every
 readback passes a schema with the key as a string, so keys are stable and
-engine-independent ("007" stays "007", never 7). ``write_stage`` records the
-stage's schema in ``<root>/<stage>/_schema.json`` before its data write (so
-a crash anywhere later still leaves the stage readable) and refuses a write
-whose schema differs from the recorded one; ``read_stage`` reads with it.
-Each snapshot line also records the schema its write used.
+engine-independent ("007" stays "007", never 7).
 """
 
 from __future__ import annotations
@@ -65,7 +69,7 @@ def _dynamic_overwrite(
     parallel writer per directory instead of N input tasks each appending a
     file to every directory (N*P small files at scale; fully serial when
     the input is a single-row-group scan). Skipped for the dimension-sized
-    metrics/lineage upserts, where a shuffle is pure overhead."""
+    commit-row upserts, where a shuffle is pure overhead."""
     if cluster:
         df = df.repartition(F.col(part_col))
     (
@@ -104,14 +108,7 @@ def _readback_schema(written: T.StructType, part_col: str) -> T.StructType:
     return T.StructType(fields)
 
 
-# lineage rows are written as (part_key, stage) partitioned by part_key;
-# metrics rows as (part_key, n_rows, stage) partitioned by part_key
-_LINEAGE_READBACK = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), True),
-        T.StructField("part_key", T.StringType(), True),
-    ]
-)
+# commit rows are written as (part_key, n_rows, stage) partitioned by part_key
 _METRICS_READBACK = T.StructType(
     [
         T.StructField("n_rows", T.LongType(), True),
@@ -122,7 +119,7 @@ _METRICS_READBACK = T.StructType(
 
 
 def _has_parquet(p: Path) -> bool:
-    return any(p.glob("*.parquet")) or any(p.glob("**/*.parquet"))
+    return any(p.glob("**/*.parquet"))
 
 
 class SnapshotStore:
@@ -139,9 +136,6 @@ class SnapshotStore:
     def _data_path(self, stage: str) -> Path:
         return self._stage(stage) / "data"
 
-    def _lineage_path(self, stage: str) -> Path:
-        return self._stage(stage) / "_lineage"
-
     def _metrics_path(self, stage: str) -> Path:
         return self._stage(stage) / "_metrics"
 
@@ -151,28 +145,29 @@ class SnapshotStore:
     def _schema_path(self, stage: str) -> Path:
         return self._stage(stage) / "_schema.json"
 
-    # -- lineage ------------------------------------------------------------
-    def completed_partitions(self, spark: SparkSession, stage: str) -> DataFrame | None:
-        p = self._lineage_path(stage)
+    # -- commit table -------------------------------------------------------
+    def _commit_table(self, spark: SparkSession, stage: str) -> DataFrame | None:
+        p = self._metrics_path(stage)
         if not _has_parquet(p):
             return None
-        return _read_keyed(spark, p, _LINEAGE_READBACK)
+        return _read_keyed(spark, p, _METRICS_READBACK)
 
-    def _committed_keys(self, spark: SparkSession, stage: str) -> set[str]:
-        done = self.completed_partitions(spark, stage)
+    def committed(self, spark: SparkSession, stage: str) -> dict[str, int]:
+        """``{part_key: n_rows}`` of every committed partition (one collect
+        of the dimension-sized commit table; empty before the first commit)."""
+        done = self._commit_table(spark, stage)
         if done is None:
-            return set()
-        return {r.part_key for r in done.select("part_key").distinct().collect()}
+            return {}
+        return {r.part_key: r.n_rows for r in done.select("part_key", "n_rows").collect()}
 
     def pending(self, work: DataFrame, spark: SparkSession, stage: str, key: str) -> DataFrame:
-        """Anti-join the work set against completed lineage (J7). Keys are
-        compared in string form (their partition-directory identity)."""
-        done = self.completed_partitions(spark, stage)
+        """Anti-join the work set against the commit table (J7). Keys are
+        compared in string form (their partition-directory identity); a left
+        anti join needs no ``distinct`` on its right side."""
+        done = self._commit_table(spark, stage)
         if done is None:
             return work
-        done_keys = done.select(
-            F.col("part_key").cast("string").alias("__done_key")
-        ).distinct()
+        done_keys = done.select(F.col("part_key").alias("__done_key"))
         return work.join(
             done_keys, work[key].cast("string") == F.col("__done_key"), "left_anti"
         )
@@ -188,9 +183,9 @@ class SnapshotStore:
         no longer read back under one schema (write a new stage)."""
         spark = df.sparkSession
         self._check_schema(spark, stage, df.schema, part_col)
-        already = self._committed_keys(spark, stage)
+        stored = self.committed(spark, stage)
 
-        # 0. schema record before any data lands (atomic replace; rewriting
+        # 1. schema record before any data lands (atomic replace; rewriting
         #    it after a passed check changes nothing the readback sees)
         rec = self._schema_path(stage)
         rec.parent.mkdir(parents=True, exist_ok=True)
@@ -198,16 +193,16 @@ class SnapshotStore:
         tmp.write_text(json.dumps({"part_col": part_col, "schema": df.schema.jsonValue()}))
         tmp.replace(rec)
 
-        # 1. data: dynamic partition overwrite (idempotent on crash-retry)
+        # 2. data: dynamic partition overwrite (idempotent on crash-retry)
         _dynamic_overwrite(df, self._data_path(stage), part_col)
 
-        # 2+3. partitions just landed = read-back keys minus committed
-        #    lineage, with per-partition counts — ONE partition-column-only
-        #    scan (parquet metadata; never a recomputation of df's DAG).
-        #    Keys come from the read-back COLUMN VALUES, not directory names:
-        #    Hive escapes special characters (space, ':', '/', '%', '=') in
-        #    paths, so a directory listing would never match lineage's raw
-        #    values and such partitions would recommit forever.
+        # 3. partitions just landed, with per-partition counts — ONE
+        #    partition-column-only scan (parquet metadata; never a
+        #    recomputation of df's DAG). Keys come from the read-back COLUMN
+        #    VALUES, not directory names: Hive escapes special characters
+        #    (space, ':', '/', '%', '=') in paths, so a directory listing
+        #    would never match the commit table's raw values and such
+        #    partitions would recommit forever.
         readback = _read_keyed(
             spark, self._data_path(stage), _readback_schema(df.schema, part_col)
         )
@@ -218,43 +213,23 @@ class SnapshotStore:
             .collect()
         }
         # A committed partition can be INTENTIONALLY rewritten (a call outside
-        # the pending() flow); its metrics must not go stale. Refresh every
-        # committed key whose current count disagrees with stored metrics, in
+        # the pending() flow); its commit row must not go stale. Refresh every
+        # committed key whose current count disagrees with its stored one, in
         # addition to the new keys. (Count equality is the cheap staleness
         # signal available from the footer-only scan; a rewrite that keeps
         # the exact row count refreshes nothing — callers needing content
         # versioning should write a new stage.)
-        stored: dict[str, int] = {}
-        if _has_parquet(self._metrics_path(stage)):
-            stored = {
-                r.part_key: r.n_rows
-                for r in self.metrics(spark, stage)
-                .select("part_key", "n_rows")
-                .collect()
-            }
-        new_keys = [k for k in counts if k not in already]
-        refreshed = [
-            k for k in counts if k in already and stored.get(k) != counts[k]
-        ]
-        mrows = [(k, counts[k]) for k in new_keys + refreshed]
-        if mrows:
-            metrics_df = local_frame(
+        new_keys = [k for k in counts if k not in stored]
+        refreshed = [k for k in counts if k in stored and stored[k] != counts[k]]
+        if new_keys or refreshed:
+            # 4. commit rows last = commit marker (an idempotent upsert)
+            commit_df = local_frame(
                 spark,
-                [(k, n, stage) for k, n in mrows],
+                [(k, counts[k], stage) for k in new_keys + refreshed],
                 "part_key string, n_rows bigint, stage string",
             )
             _dynamic_overwrite(
-                metrics_df, self._metrics_path(stage), "part_key", cluster=False
-            )
-
-        if new_keys:
-            # 4. lineage last = commit marker (also an idempotent upsert;
-            #    refreshed keys are already committed — no new marker needed)
-            lineage_df = local_frame(
-                spark, [(k, stage) for k in new_keys], "part_key string, stage string"
-            )
-            _dynamic_overwrite(
-                lineage_df, self._lineage_path(stage), "part_key", cluster=False
+                commit_df, self._metrics_path(stage), "part_key", cluster=False
             )
 
         snap = {
@@ -314,9 +289,6 @@ class SnapshotStore:
             raise ValueError(f"stage {stage!r} has no data")
         return _read_keyed(spark, self._data_path(stage), schema)
 
-    def metrics(self, spark: SparkSession, stage: str) -> DataFrame:
-        return _read_keyed(spark, self._metrics_path(stage), _METRICS_READBACK)
-
     def snapshots(self, stage: str) -> list[dict]:
         p = self._snapshots_path(stage)
         if not p.exists():
@@ -354,8 +326,8 @@ def run_resumable(
     key: str,
     compute,
 ) -> DataFrame:
-    """Resume-or-compute driver: computes only partitions missing from
-    lineage, then returns the full stage output. ``compute(keys_df)`` must
+    """Resume-or-compute driver: computes only partitions missing from the
+    commit table, then returns the full stage output. ``compute(keys_df)`` must
     return a DataFrame containing ``key`` as its partition column."""
     todo = store.pending(work_keys, spark, stage, key)
     n_todo = todo.count()

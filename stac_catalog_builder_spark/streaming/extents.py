@@ -25,10 +25,10 @@ The CURRENT state is then an exact merge of all committed increments,
 bit-equal to a from-scratch recompute over the full history at any point
 in time.
 
-Exactly-once comes from two guards: epochs already committed to lineage
-are skipped up front, and the store's dynamic-partition-overwrite commit
-makes a replayed half-written epoch replace rather than append — a replay
-can never double-count an increment.
+Exactly-once comes from two guards: epochs the store reports as committed
+(a row in its one commit table) are skipped up front, and the store's
+dynamic-partition-overwrite commit makes a replayed half-written epoch
+replace rather than append — a replay can never double-count an increment.
 """
 
 from __future__ import annotations
@@ -54,13 +54,7 @@ def run_increment_maintenance(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        done = store.completed_partitions(spark, stage)
-        if done is not None and (
-            done.where(F.col("part_key") == F.lit(str(int(epoch_id))))
-            .limit(1)
-            .count()
-            > 0
-        ):
+        if str(int(epoch_id)) in store.committed(spark, stage):
             return  # epoch replayed after a successful commit: no-op
         store.write_stage(
             increment_fn(batch_df).withColumn("part_key", F.lit(int(epoch_id))),

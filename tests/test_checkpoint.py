@@ -1,4 +1,4 @@
-"""Checkpoint/lineage/resume tests — parity with the reference's slice
+"""Checkpoint/commit-table/resume tests — parity with the reference's slice
 spill/skip/restore semantics (stacbuilder/terracatalog.py:339-396, 493-551)."""
 
 from __future__ import annotations
@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF001, jobs_run_by
 from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore, run_resumable
 
 INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -28,8 +29,7 @@ def test_write_then_read_stage(spark, store):
     assert sorted(snap["partitions"]) == ["0", "1", "2", "3"]
     back = store.read_stage(spark, "s1")
     assert back.count() == 100
-    m = {r.part_key: r.n_rows for r in store.metrics(spark, "s1").collect()}
-    assert m == {"0": 25, "1": 25, "2": 25, "3": 25}
+    assert store.committed(spark, "s1") == {"0": 25, "1": 25, "2": 25, "3": 25}
 
 
 def test_pending_anti_join(spark, store):
@@ -45,8 +45,7 @@ def test_pending_anti_join(spark, store):
     work = _work(spark, ["0", "1", "2", "3", "007", "7"])
     pending = store.pending(work, spark, "s2", "part_key").collect()
     assert sorted(r.part_key for r in pending) == ["2", "3", "7"]
-    m = {r.part_key: r.n_rows for r in store.metrics(spark, "s2").collect()}
-    assert m == {"0": 5, "1": 5, "007": 1}
+    assert store.committed(spark, "s2") == {"0": 5, "1": 5, "007": 1}
     back = store.read_stage(spark, "s2").where(F.col("v") == 99).collect()
     assert [r.part_key for r in back] == ["007"]
     assert {k: spark.conf.get(k) for k in confs} == confs
@@ -81,8 +80,8 @@ def test_run_resumable_computes_only_missing(spark, store):
 
 
 def test_crash_retry_is_exactly_once(spark, store):
-    """Simulate a crash between the data write and the lineage commit: the
-    partition's data is on disk but lineage is missing. The retry must
+    """Simulate a crash between the data write and the commit row: the
+    partition's data is on disk but its commit row is missing. The retry must
     REPLACE the partition (dynamic partition overwrite), not append — the
     documented exactly-once-per-partition guarantee."""
     from stac_catalog_builder_spark.sources.checkpoint import _dynamic_overwrite
@@ -90,9 +89,9 @@ def test_crash_retry_is_exactly_once(spark, store):
     df = spark.createDataFrame(
         [("1", i) for i in range(10)], "part_key string, v int"
     )
-    # crash: data landed (possibly partially), lineage never written
+    # crash: data landed (possibly partially), commit row never written
     _dynamic_overwrite(df, store._data_path("s5"), "part_key")
-    assert store.completed_partitions(spark, "s5") is None
+    assert store.committed(spark, "s5") == {}
 
     calls = []
 
@@ -109,12 +108,11 @@ def test_crash_retry_is_exactly_once(spark, store):
     out2 = run_resumable(store, spark, "s5", work, "part_key", compute)
     assert len(calls) == 1
     assert out2.count() == 10
-    m = {r.part_key: r.n_rows for r in store.metrics(spark, "s5").collect()}
-    assert m == {"1": 10}  # metrics committed exactly once too
+    assert store.committed(spark, "s5") == {"1": 10}  # committed exactly once
 
 
 def test_crash_before_snapshot_append_still_resumes(spark, store):
-    """A crash after the lineage commit but before the snapshot line is
+    """A crash after the commit row but before the snapshot line is
     appended leaves nothing pending; the rerun must still read the stage."""
     calls = []
 
@@ -178,7 +176,7 @@ def test_read_stage_as_of_partition_sets(spark, store):
 
 def test_partition_keys_with_special_characters_commit_once(spark, store):
     """Hive escapes spaces/colons/percent in partition directory names; the
-    commit protocol must compare RAW values (read-back column, lineage), or
+    commit protocol must compare RAW values (read-back column, commit rows), or
     such partitions would never register as committed and recompute on
     every resume."""
     keys = ["2024-01-01 00:00:00", "a:b/c", "100%", "plain"]
@@ -189,8 +187,7 @@ def test_partition_keys_with_special_characters_commit_once(spark, store):
     assert sorted(snap["partitions"]) == sorted(keys)
     work = _work(spark, keys)
     assert store.pending(work, spark, "s7", "part_key").count() == 0  # all committed
-    m = {r.part_key for r in store.metrics(spark, "s7").collect()}
-    assert m == set(keys)
+    assert set(store.committed(spark, "s7")) == set(keys)
     # second write of the same partitions: committed set unchanged, no dupes
     store.write_stage(df, "s7", "part_key")
     assert store.read_stage(spark, "s7").count() == len(keys)
@@ -235,24 +232,23 @@ def test_rewriting_committed_partition_refreshes_metrics(spark, store):
         (F.col("id") % 2).cast("string").alias("part_key"), F.col("id").alias("v")
     )
     store.write_stage(df1, "s9", "part_key")
-    m1 = {r.part_key: r.n_rows for r in store.metrics(spark, "s9").collect()}
-    assert m1 == {"0": 20, "1": 20}
+    assert store.committed(spark, "s9") == {"0": 20, "1": 20}
 
     # rewrite partition "1" with different (fewer) rows, bypassing pending()
     df2 = spark.range(5).select(
         F.lit("1").alias("part_key"), (F.col("id") + 1000).alias("v")
     )
     snap = store.write_stage(df2, "s9", "part_key")
-    m2 = {r.part_key: r.n_rows for r in store.metrics(spark, "s9").collect()}
+    m2 = store.committed(spark, "s9")
     assert m2 == {"0": 20, "1": 5}, m2
     assert snap["partitions"] == []          # no NEW commits
     assert snap["refreshed"] == ["1"]        # the rewrite is recorded
 
 
 def test_known_readback_schemas_match_inference(spark, store):
-    # the store's known-schema reads (lineage, metrics, write-stage
-    # readback) must be exactly what inference-off spark.read.parquet
-    # would produce: names, order, types, partition col last as string
+    # the store's known-schema reads (commit table, write-stage readback)
+    # must be exactly what inference-off spark.read.parquet would produce:
+    # names, order, types, partition col last as string
     from stac_catalog_builder_spark.sources import checkpoint as cp
 
     df = spark.range(50).select(
@@ -265,13 +261,11 @@ def test_known_readback_schemas_match_inference(spark, store):
     prev = spark.conf.get(INFER_KEY, "true")
     spark.conf.set(INFER_KEY, "false")
     try:
-        inferred_lineage = spark.read.parquet(str(store._lineage_path("schem"))).schema
         inferred_metrics = spark.read.parquet(str(store._metrics_path("schem"))).schema
         inferred_data = spark.read.parquet(str(store._data_path("schem"))).schema
     finally:
         spark.conf.set(INFER_KEY, prev)
 
-    assert cp._LINEAGE_READBACK == inferred_lineage
     assert cp._METRICS_READBACK == inferred_metrics
     assert cp._readback_schema(df.schema, "part_key") == inferred_data
     # and the rows themselves round-trip identically through the known path
@@ -287,3 +281,58 @@ def test_known_readback_schemas_match_inference(spark, store):
         )
     )
     assert a == b
+
+
+def test_commit_and_resume_job_counts(spark, store):
+    """The commit table is read once per write and anti-joined without a
+    distinct, and one upsert commits: on the sf0.01 catalog assignments
+    (5 partition keys) a fresh write runs at most 7 Spark jobs, a resume
+    probe's count at most 4 and a rewrite of the committed stage at most 7."""
+    import __spark_entry__ as e
+    from stac_catalog_builder_spark.operators.tiling import with_tile
+
+    tiled = with_tile(e._assigned(spark, SF001), zoom=6)
+    df = tiled.select(
+        "image_id", "tile_id", "collection_id", "tile_x", "tile_y",
+        F.col("collection_id").alias("part_key"),
+    )
+    snap, fresh = jobs_run_by(spark, "ckpt-fresh", lambda: store.write_stage(df, "a", "part_key"))
+    assert len(snap["partitions"]) == 5
+    n, probe = jobs_run_by(
+        spark, "ckpt-pending", lambda: store.pending(df, spark, "a", "part_key").count()
+    )
+    assert n == 0
+    snap, rewrite = jobs_run_by(spark, "ckpt-rewrite", lambda: store.write_stage(df, "a", "part_key"))
+    assert snap["partitions"] == [] and snap["refreshed"] == []
+    counts = (len(fresh), len(probe), len(rewrite))
+    assert counts[0] <= 7 and counts[1] <= 4 and counts[2] <= 7, counts
+
+
+def test_store_with_lineage_table_resumes_unchanged(spark, store):
+    """A stage that also holds a ``_lineage`` table (an older layout wrote
+    it after ``_metrics`` as a second commit marker) resumes with no
+    migration: ``_lineage`` is never read, and a key with a ``_metrics`` row
+    but no ``_lineage`` row (that layout's crash window, after its data was
+    written and read back) counts as committed."""
+    from stac_catalog_builder_spark.session import local_frame
+    from stac_catalog_builder_spark.sources.checkpoint import _dynamic_overwrite
+
+    df = spark.createDataFrame(
+        [("007", 1), ("a", 2), ("a", 3), ("b", 4)], "part_key string, v bigint"
+    )
+    store.write_stage(df, "old", "part_key")
+    lineage = local_frame(spark, [("007", "old"), ("a", "old")], "part_key string, stage string")
+    _dynamic_overwrite(lineage, store._stage("old") / "_lineage", "part_key", cluster=False)
+
+    work = _work(spark, ["007", "a", "b", "c", "7"])
+    pending = store.pending(work, spark, "old", "part_key").collect()
+    assert sorted(r.part_key for r in pending) == ["7", "c"]
+    rows = sorted(map(tuple, store.read_stage(spark, "old").collect()))
+    assert rows == [(1, "007"), (2, "a"), (3, "a"), (4, "b")]
+    assert store.committed(spark, "old") == {"007": 1, "a": 2, "b": 1}
+
+    snap = store.write_stage(
+        spark.createDataFrame([("c", 5)], "part_key string, v bigint"), "old", "part_key"
+    )
+    assert snap["partitions"] == ["c"] and snap["refreshed"] == []
+    assert [r.part_key for r in store.pending(work, spark, "old", "part_key").collect()] == ["7"]

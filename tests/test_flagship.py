@@ -63,7 +63,9 @@ def test_flagship_sink_and_resume(spark, tmp_path):
     build_catalog(spark, SF, out_dir=str(out))
     # partitioned items in y/m/d layout
     assert list((out / "items").glob("year=*/month=*/day=*"))
-    # lineage + metrics + snapshots landed
+    # data, the commit table, the snapshot log and the schema record landed
+    stage = sorted(p.name for p in (out / "assignments").iterdir())
+    assert stage == ["_metrics", "_schema.json", "_snapshots.json", "data"], stage
     snaps = [json.loads(line) for line in (out / "assignments" / "_snapshots.json").read_text().splitlines()]
     assert len(snaps) == 1
     assert sorted(snaps[0]["partitions"]) == [f"coll_{i}" for i in range(5)]

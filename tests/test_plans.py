@@ -241,7 +241,7 @@ def _optimized(df) -> str:
 
 def test_pip_join_and_resume_plans_read_no_python_rdd(spark, tmp_path):
     """A driver-built dimension (the PIP cover and polygon tables, the
-    checkpoint's metrics and lineage upserts) is a JVM LocalRelation, not a
+    checkpoint's commit-row upserts) is a JVM LocalRelation, not a
     pickled LogicalRDD: a job over a LogicalRDD starts Python workers though
     the plan runs no Python code."""
     from stac_catalog_builder_spark.sources.checkpoint import SnapshotStore
@@ -284,6 +284,17 @@ def test_exact_collapse_hashes_each_text_once(spark):
     with cache.run():
         plan = _optimized(e.queries()["minhash_pairs"](spark, SF))
     assert "md5(" in plan and "isnotnull(md5(" not in plan, plan
+
+
+def test_lsh_topk_scores_each_pair_once(spark):
+    """A pair sharing several of the LSH buckets is deduplicated before it
+    is scored: in the optimized plan the cosine's ``aggregate(`` fold sits
+    above the aggregate that deduplicates (query_id, neighbor_id), so its
+    d-length folds run once per pair, not once per shared bucket."""
+    lines = _optimized(e.queries()["ann_lsh_topk"](spark, SF)).splitlines()
+    fold = next(i for i, s in enumerate(lines) if "aggregate(zip_with(" in s)
+    dedup = next(i for i, s in enumerate(lines) if "Aggregate [query_id" in s)
+    assert fold < dedup, "\n".join(lines)
 
 
 def test_pip_join_strategy_follows_the_broadcast_budget(spark):
